@@ -539,17 +539,13 @@ def q_m1_msgtype_command_map(spark, sf):
     """Msg-type -> raw-channel mapping as a BROADCAST dimension table
     (crypto-msg-type/src/lib.rs:55-77; per-exchange catalog
     exchanges/binance.rs:5-15) instead of an inline CASE: events get
-    a cycling msg_type, the dim join renders the channel."""
-    from crypto_crawler_rs_spark.functions.partitioning import spread_small_scan
-
+    a cycling msg_type, the dim join renders the channel.  No scan
+    spread: the per-row work is one lookup and a concat, cheaper than
+    the round-robin exchange a spread adds."""
     mapping = spark.createDataFrame(
         _MSGTYPE_CHANNELS, "msg_type string, raw_channel string"
     )
-    # r7: spread the single-split scan so the broadcast-join probe +
-    # channel rendering use every core (no-op at real scan widths)
-    e = spread_small_scan(
-        _t(spark, sf, "events").select("event_id", "event_type")
-    )
+    e = _t(spark, sf, "events").select("event_id", "event_type")
     msg_type = F.element_at(
         F.array(*[F.lit(m) for m, _ in _MSGTYPE_CHANNELS]),
         (F.col("event_id") % 6 + 1).cast("int"),
@@ -756,9 +752,9 @@ def q_dedup_minhash_lsh(spark, sf):
 
 
 def q_dedup_simhash(spark, sf):
-    """SimHash fingerprints (JVM-side bit sums), md5 family / 60 bits
-    so the DuckDB oracle reproduces them bit-for-bit (stays positive
-    in a signed BIGINT on both engines)."""
+    """SimHash fingerprints (memoized Arrow pass of signed bit sums),
+    md5 family / 60 bits so the DuckDB oracle reproduces them
+    bit-for-bit (stays positive in a signed BIGINT on both engines)."""
     from crypto_crawler_rs_spark.operators.dedup import simhash_fingerprints
 
     return simhash_fingerprints(

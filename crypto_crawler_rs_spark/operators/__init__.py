@@ -9,12 +9,9 @@ from .dedup import (
     exact_dedup,
     filter_new_digests,
     shingle_rows,
-    word_shingles,
     write_digest_index,
     ngram_jaccard_pairs,
-    minhash_signatures,
     minhash_lsh_pairs,
-    simhash64,
     simhash_fingerprints,
     simhash_pairs,
 )
@@ -61,12 +58,9 @@ __all__ = [
     "incremental_lsh_pairs",
     "write_band_index",
     "shingle_rows",
-    "word_shingles",
     "write_digest_index",
     "ngram_jaccard_pairs",
-    "minhash_signatures",
     "minhash_lsh_pairs",
-    "simhash64",
     "simhash_fingerprints",
     "simhash_pairs",
     "cosine_topk_bruteforce",

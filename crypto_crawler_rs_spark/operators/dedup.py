@@ -2,52 +2,45 @@
 
 The reference's dedup is identity-level: an anti-join of discovered
 symbols vs the subscribed set (crypto-crawler/src/crawlers/utils.rs:543-555).
-A web-scale corpus additionally needs CONTENT-level dedup.  All
-operators below are pure DataFrame compositions (JVM hash functions,
-no Python in the hot path) except where noted; each scales by
-shuffling only on small keys (hashes / band signatures), never on
-raw text.
+A web-scale corpus additionally needs CONTENT-level dedup.  Each
+operator scales by shuffling only on small keys (hashes / band
+signatures), never on raw text.  Every operator has ONE execution
+path.  Shingling and the memoized md5 MinHash/SimHash builds run
+over Arrow batches in Python, one ``mapInPandas`` pass each: there
+the JVM alternatives (higher-order functions interpreted per element,
+or one md5 per token occurrence) lost every measured A/B, see
+``shingle_rows``.  Joins, aggregates and per-row hashes stay
+JVM-side.
 
 Operators
 ---------
 exact_dedup           hash-groupBy on md5(text)
-word_shingles         shared shingling primitive (JVM ``transform``)
+shingle_rows          shared shingling primitive (Arrow pass)
 ngram_jaccard_pairs   all-pairs n-gram Jaccard via shingle inverted
                       index (self-join on shingle hash)
 minhash_lsh_pairs     MinHash signatures + banded LSH candidate
                       generation + exact-Jaccard verification —
                       the bloom-prefilter-then-exact-confirm pattern
                       again (SURVEY.md §2.4 J1)
-simhash64             64-bit SimHash per doc, fully JVM-side
-                      (explode tokens -> xxhash64 -> 64 signed bit
-                      sums -> reassemble), near-dups = small hamming
+simhash_fingerprints  n-bit SimHash per doc (md5: memoized Arrow
+                      pass; xxhash64: JVM explode + signed bit sums)
+simhash_pairs         near-dups = small hamming, banded equi-join
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-
-def _family_hash(tag: str, col: Column, hash_family: str) -> Column:
-    """Seeded hash-family member H_tag(col).
-
-    * ``xxhash64`` (default) — JVM-native, 8-byte output: the
-      production path (cheapest shuffle keys, no string
-      materialization).
-    * ``md5`` — 32-char lowercase hex STRING.  Identical in Spark and
-      DuckDB, which makes every LSH decision (min-hash, band
-      signatures) reproducible by the SQL oracle; min/comparisons on
-      the fixed-width hex encode the same order as the numeric value.
-    """
-    seeded = F.concat(F.lit(f"{tag}#"), col)
-    if hash_family == "xxhash64":
-        return F.xxhash64(seeded)
-    if hash_family == "md5":
-        return F.md5(seeded)
-    raise ValueError(f"unknown hash_family {hash_family!r}")
+# Partition-local memo caps of the md5 Arrow builders: the memo is
+# cleared when it reaches the cap, bounding executor memory at any
+# vocabulary size.  Each builder reads its cap when it BUILDS the
+# plan, so the value the closure ships to the workers is the one in
+# force at build time.
+_MINHASH_MEMO_CAP = 100_000
+_SIMHASH_MEMO_CAP = 1_000_000
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -62,61 +55,25 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def word_shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
-    """Add a ``shingles`` array<string> of k-word shingles — built-in
-    higher-order functions only (sequence/transform/slice), all
-    whole-stage-codegen.
-
-    The token array is materialized as a column FIRST: an inline
-    ``split()`` referenced inside the transform lambda is re-evaluated
-    per shingle (no common-subexpression elimination across lambda
-    scopes), turning an O(words) row into O(words²) — measured 2.4x
-    on the sf0.1 dedup queries."""
-    words_col = f"_words_{text_col}"
-    out = df.withColumn(words_col, F.split(F.col(text_col), " "))
-    words = F.col(words_col)
-    n = F.greatest(F.size(words) - (k - 1), F.lit(0))
-    shingles = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.concat_ws(" ", F.slice(words, i, k)),
-    )
-    return out.withColumn(
-        "shingles", F.when(n > 0, F.array_distinct(shingles)).otherwise(F.array())
-    ).drop(words_col)
-
-
 def shingle_rows(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Exploded distinct k-word shingle rows ``(_id, _n, _s)`` where
     ``_n`` is the doc's distinct-shingle count — the shared input of
-    every shingle-based dedup operator.
+    every shingle-based dedup operator.  Tokens are ``text.split(' ')``
+    (empty tokens kept, NULL text = no tokens); docs with fewer than
+    ``k`` tokens emit no row.
 
-    Two implementations with IDENTICAL output (multiset of rows;
-    pinned by ``test_shingle_impls_equivalent``):
-
-    * ``impl='hof'`` — :func:`word_shingles` + explode.  Pure JVM, but
-      higher-order functions (transform/slice/concat_ws lambdas) are
-      INTERPRETED per element, not codegen'd.
-    * ``impl='arrow'`` (default) — one ``mapInPandas`` doing the
-      split/join in Python over Arrow batches.  Measured ~2.9x faster
-      steady-state at sf0.1 (0.8s vs 2.2s for the full explode) —
-      the interpreted-HOF tax outweighs Python string costs here,
-      the exception to the usual stay-JVM rule (same finding as the
-      LSH Arrow matmul, SNIPPETS r2)."""
-    if impl == "hof":
-        sh = word_shingles(df.select(id_col, text_col), text_col, k)
-        return sh.select(
-            F.col(id_col).alias("_id"),
-            F.size("shingles").alias("_n"),
-            F.explode("shingles").alias("_s"),
-        )
-    if impl != "arrow":
-        raise ValueError(f"unknown shingle impl {impl!r}")
+    One ``mapInPandas`` doing the split/join in Python over Arrow
+    batches.  The pure-JVM alternative (``transform``/``slice``/
+    ``concat_ws`` lambdas + explode) is interpreted per element, not
+    codegen'd, and measured ~2.9x slower at sf0.1 — the exception to
+    the usual stay-JVM rule (same finding as the LSH Arrow matmul,
+    SNIPPETS r2).  That JVM build survives as the independent
+    reference in ``test_shingle_impls_equivalent``."""
     # r7: the bench corpora are single-row-group parquet files, so the
     # python shingling pass would run as ONE task; spread first
     # (no-op at real scan widths — see functions/partitioning.py)
@@ -146,9 +103,7 @@ def shingle_rows(
                 ss.extend(sset)
             yield pd.DataFrame({"_id": ids, "_n": ns, "_s": ss})
 
-    return df.select(id_col, text_col).mapInPandas(
-        gen, schema="_id long, _n int, _s string"
-    )
+    return df.mapInPandas(gen, schema="_id long, _n int, _s string")
 
 
 def ngram_jaccard_pairs(
@@ -159,7 +114,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     df_cap: int | None = None,
     cleanup: list | None = None,
-    shingle_impl: str = "arrow",
 ) -> DataFrame:
     """All doc pairs with Jaccard(shingle sets) >= threshold.
 
@@ -176,7 +130,8 @@ def ngram_jaccard_pairs(
     from non-discriminative shingles (they connect everything, so
     they carry ~zero Jaccard signal).  NOTE the semantics change:
     shared/size counts then use the CAPPED shingle sets on both sides
-    of the Jaccard — mirror the cap in any oracle.
+    of the Jaccard — mirror the cap in any oracle.  ``df_cap=None``
+    runs the same plan without the cap's keep-filter join.
 
     ``cleanup``: optional list the persisted shingle index is
     appended to — unpersist after materializing the result, or a
@@ -187,12 +142,12 @@ def ngram_jaccard_pairs(
     from pyspark import StorageLevel
 
     # persist the exploded (id, shingle-hash) index: BOTH sides of the
-    # self-join (and the df-cap count) reuse it, so the text scan +
-    # shingling runs once instead of 2-3x (it dominates the query)
+    # self-join, the sizes aggregate (and the df-cap count) reuse it,
+    # so the text scan + shingling runs once instead of 3-4x (it
+    # dominates the query)
     ex = (
-        shingle_rows(df, id_col, text_col, k, impl=shingle_impl)
-        .withColumn("_sh", F.xxhash64("_s"))
-        .drop("_s")
+        shingle_rows(df, id_col, text_col, k)
+        .select("_id", F.xxhash64("_s").alias("_sh"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     if cleanup is not None:
@@ -208,54 +163,35 @@ def ngram_jaccard_pairs(
         # both sides and the sizes aggregate once more, and without a
         # cache each consumer re-runs the df-cap count+join (the
         # captured plan held FOUR copies of the keep aggregate)
-        ex = ex.drop("_n").join(keep, "_sh").persist(StorageLevel.MEMORY_AND_DISK)
+        ex = ex.join(keep, "_sh").persist(StorageLevel.MEMORY_AND_DISK)
         if cleanup is not None:
             cleanup.append(ex)
-        # sizes recomputed over the SURVIVING shingles so the Jaccard
-        # denominator matches the capped sets.  r7: sizes are attached
-        # to the AGGREGATED pair counts (one row per doc pair) instead
-        # of riding through the df² join fanout — n_a/n_b are functions
-        # of id_a/id_b, so grouping on the ids alone yields identical
-        # groups with half the aggregate key width, and the capped
-        # index keeps its _sh partitioning into the self-join (no _id
-        # re-shuffle on the fat path; guide §2.3/§2.4).
-        sizes = ex.groupBy("_id").agg(F.count("*").alias("_n"))
-        a = ex.select(F.col("_id").alias("id_a"), "_sh")
-        b = ex.select(F.col("_id").alias("id_b"), "_sh")
-        counts = (
-            a.join(b, "_sh")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("shared"))
-        )
-        pairs = (
-            counts.join(
-                sizes.select(F.col("_id").alias("id_a"), F.col("_n").alias("n_a")),
-                "id_a",
-            )
-            .join(
-                sizes.select(F.col("_id").alias("id_b"), F.col("_n").alias("n_b")),
-                "id_b",
-            )
-            .withColumn(
-                "jaccard",
-                F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-        )
-        return pairs
-    a = ex.select(
-        F.col("_id").alias("id_a"), F.col("_n").alias("n_a"), "_sh"
-    )
-    b = ex.select(
-        F.col("_id").alias("id_b"), F.col("_n").alias("n_b"), "_sh"
-    )
-    pairs = (
+    # sizes counted over the indexed shingles so the Jaccard
+    # denominator matches the (capped) sets.  r7: sizes are attached
+    # to the AGGREGATED pair counts (one row per doc pair) instead of
+    # riding through the df² join fanout — n_a/n_b are functions of
+    # id_a/id_b, so grouping on the ids alone yields identical groups
+    # with half the aggregate key width, and the index keeps its _sh
+    # partitioning into the self-join (no _id re-shuffle on the fat
+    # path; guide §2.3/§2.4).
+    sizes = ex.groupBy("_id").agg(F.count("*").alias("_n"))
+    a = ex.select(F.col("_id").alias("id_a"), "_sh")
+    b = ex.select(F.col("_id").alias("id_b"), "_sh")
+    counts = (
         a.join(b, "_sh")
         .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("shared"))
+    )
+    return (
+        counts.join(
+            sizes.select(F.col("_id").alias("id_a"), F.col("_n").alias("n_a")),
+            "id_a",
+        )
+        .join(
+            sizes.select(F.col("_id").alias("id_b"), F.col("_n").alias("n_b")),
+            "id_b",
+        )
         .withColumn(
             "jaccard",
             F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared")),
@@ -263,26 +199,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
     )
-    return pairs
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 32,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """(id, h0..h{n-1}) MinHash signature — one groupBy with n min
-    aggregates over a seeded hash family of the shingles
-    (H_i(s) = family('mh{i}#' || s); see :func:`_family_hash`)."""
-    ex = shingle_rows(df, id_col, text_col, k).select("_id", "_s")
-    aggs = [
-        F.min(_family_hash(f"mh{i}", F.col("_s"), hash_family)).alias(f"h{i}")
-        for i in range(n_hashes)
-    ]
-    return ex.groupBy("_id").agg(*aggs).withColumnRenamed("_id", id_col)
 
 
 def _minhash_sig_rows_arrow(
@@ -305,16 +221,17 @@ def _minhash_sig_rows_arrow(
     part the JVM agg re-hashes per row and the memo pays once (at
     bench scale the corpus vocabulary makes the ratio ~10-100x; at
     web scale the stopword-like head still dominates occurrences).
-    The memo is capped (cleared at 100k entries ≈ a few hundred MB)
-    so executor memory is bounded at any scale; docs with fewer than
-    ``k`` words emit no row, matching the groupBy over their zero
-    shingle rows.  Requires unique ids (true for every caller: raw
+    The memo is capped (cleared at ``_MINHASH_MEMO_CAP`` entries ≈ a
+    few hundred MB) so executor memory is bounded at any scale; docs
+    with fewer than ``k`` words emit no row, matching the groupBy over
+    their zero shingle rows.  Requires unique ids (true for every caller: raw
     doc ids, exact-deduped keepers, digest-filtered batches).
     """
     from ..functions.partitioning import spread_small_scan
 
     src = spread_small_scan(docs.select(id_col, text_col))
     seeds = [f"mh{i}#".encode("utf-8") for i in range(n_hashes)]
+    memo_cap = _MINHASH_MEMO_CAP
 
     def gen(batches):
         import hashlib
@@ -342,7 +259,7 @@ def _minhash_sig_rows_arrow(
                         hs = tuple(
                             hashlib.md5(sd + b).hexdigest() for sd in seeds
                         )
-                        if len(memo) >= 100_000:
+                        if len(memo) >= memo_cap:
                             memo.clear()
                         memo[s] = hs
                     ap(hs)
@@ -359,37 +276,53 @@ def _minhash_sig_rows_arrow(
 
 
 def _band_signatures(
-    ex_base: DataFrame,
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
     n_hashes: int,
     n_bands: int,
     hash_family: str,
-    docs: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
-    """``(_id, _band, _sig)`` banded MinHash signatures from a shingle
-    table (``shingle_rows`` output) — the shared band construction of
-    :func:`minhash_lsh_pairs` and :func:`write_band_index`, so the
+    cleanup: list | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(ex, banded)``: the docs' shingle table (``shingle_rows``
+    output) and their ``(_id, _band, _sig)`` banded MinHash
+    signatures — the shared build of :func:`minhash_lsh_pairs`,
+    :func:`write_band_index` and :func:`incremental_lsh_pairs`, so the
     incremental path collides on bit-identical signatures.
 
-    When the caller also passes the source ``docs`` (id, text) and the
-    family is md5, the signature table comes from
-    :func:`_minhash_sig_rows_arrow` (one memoized Arrow pass) instead
-    of the n_hashes-seeded-md5-per-shingle-row JVM aggregation —
-    identical output, ~10x less hashing (r7, guide §4).  The xxhash64
-    family keeps the JVM agg (no python twin of Spark's xxhash64 in
-    this container; its 8-byte keys also hash ~10x faster than md5,
-    so the seeded agg is not the bottleneck there)."""
-    rows_per_band = n_hashes // n_bands
-    if docs is not None and hash_family == "md5":
+    The family picks the signature builder, and the builder decides
+    whether the shingle table is cached:
+
+    * ``md5`` — :func:`_minhash_sig_rows_arrow`, one memoized Arrow
+      pass over ``docs`` (bit-identical to the seeded-md5 min
+      aggregation the oracle replays, ~10x less hashing; r7, guide
+      §4).  It never reads ``ex``, so ``ex`` keeps the caller's single
+      consumer and is NOT persisted.
+    * ``xxhash64`` — a JVM ``min(xxhash64('mh{i}#' || s))`` aggregation
+      over ``ex`` (no python twin of Spark's xxhash64 here; its 8-byte
+      keys also hash ~10x faster than md5, so the agg is not the
+      bottleneck).  ``ex`` then feeds the signatures AND the caller,
+      so it is persisted and appended to ``cleanup``."""
+    from pyspark import StorageLevel
+
+    ex = shingle_rows(docs, id_col, text_col, k)
+    if hash_family == "md5":
         sig = _minhash_sig_rows_arrow(docs, id_col, text_col, k, n_hashes)
+        band_hash = F.md5
+    elif hash_family == "xxhash64":
+        ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
+        if cleanup is not None:
+            cleanup.append(ex)
+        sig = ex.groupBy("_id").agg(
+            *[
+                F.min(F.xxhash64(F.concat(F.lit(f"mh{i}#"), F.col("_s")))).alias(f"h{i}")
+                for i in range(n_hashes)
+            ]
+        )
+        band_hash = F.xxhash64
     else:
-        aggs = [
-            F.min(_family_hash(f"mh{i}", F.col("_s"), hash_family)).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-        sig = ex_base.groupBy("_id").agg(*aggs)
+        raise ValueError(f"unknown hash_family {hash_family!r}")
     # ONE pass, not a union of n_bands branches (r7, guide §2.4): the
     # branch-per-band union re-ran the 32-min-agg final aggregation
     # once per band (the map side deduped via ReusedExchange, the
@@ -397,16 +330,23 @@ def _band_signatures(
     # posexplode over the array of band signatures computes the
     # signature table once and emits identical (_id, _band, _sig)
     # rows (pos == the old F.lit(b) band id, same int type).
-    band_sigs = []
-    for b in range(n_bands):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_key = F.concat_ws("|", *[c.cast("string") for c in cols])
-        band_sigs.append(
-            F.xxhash64(band_key) if hash_family == "xxhash64" else F.md5(band_key)
+    rows_per_band = n_hashes // n_bands
+    band_sigs = [
+        band_hash(
+            F.concat_ws(
+                "|",
+                *[
+                    F.col(f"h{b * rows_per_band + r}").cast("string")
+                    for r in range(rows_per_band)
+                ],
+            )
         )
-    return sig.select(
+        for b in range(n_bands)
+    ]
+    banded = sig.select(
         "_id", F.posexplode(F.array(*band_sigs)).alias("_band", "_sig")
     )
+    return ex, banded
 
 
 def _confirm_pairs(
@@ -481,7 +421,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     hash_family: str = "xxhash64",
     bucket_cap: int | None = None,
-    shingle_impl: str = "arrow",
     cleanup: list | None = None,
 ) -> DataFrame:
     """Near-dup pairs via banded LSH then EXACT Jaccard confirmation.
@@ -506,34 +445,21 @@ def minhash_lsh_pairs(
     """
     from pyspark import StorageLevel
 
-    # shingle once, reuse for both the signature build and the exact
-    # confirmation join (the shingling scan is the expensive part).
-    # r7 4th pass: on the md5/arrow family the signatures come from
-    # the separate memoized Arrow pass over the docs, so the shingle
-    # table's ONLY consumer is the confirm's one sets aggregation —
-    # the persist there was a pure cache-write pass (the same
-    # single-consumer call made in write_band_index's arrow branch).
-    # The JVM-agg family keeps it (signature build + confirm share it).
-    ex_base = shingle_rows(df, id_col, text_col, k, impl=shingle_impl)
-    if hash_family != "md5":
-        ex_base = ex_base.persist(StorageLevel.MEMORY_AND_DISK)
-        if cleanup is not None:
-            # same contract as ngram_jaccard_pairs (ADVICE r3 #4): the
-            # caller unpersists the shingle index after materializing,
-            # or a long-lived session accumulates cached partitions
-            # per call
-            cleanup.append(ex_base)
-    banded = _band_signatures(
-        ex_base, n_hashes, n_bands, hash_family,
-        docs=df, id_col=id_col, text_col=text_col, k=k,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # shingle once; the table feeds the exact confirmation (and, on
+    # the xxhash64 family, the signature build — _band_signatures
+    # persists it then, same cleanup contract as ngram_jaccard_pairs,
+    # ADVICE r3 #4)
+    ex, banded = _band_signatures(
+        df, id_col, text_col, k, n_hashes, n_bands, hash_family, cleanup
+    )
     # persist (r7): the self-join below consumes `banded` on BOTH
     # sides, and the planner broadcasts one of them — no exchange to
     # reuse, so without the cache the signature build (the arrow md5
     # pass / the 32-min aggregation) executes twice per query.  The
     # plan pin: exactly ONE MapInPandas sig pass under the candidate
     # join (plans/r07/dedup_minhash_lsh_after.txt).  Same cleanup
-    # contract as ex_base.
+    # contract as the shingle table.
+    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
     if cleanup is not None:
         cleanup.append(banded)
     if bucket_cap is not None:
@@ -552,7 +478,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
     # exact confirm: jaccard on true shingle sets of candidates only
-    return _confirm_pairs(cand, ex_base, threshold, cleanup=cleanup)
+    return _confirm_pairs(cand, ex, threshold, cleanup=cleanup)
 
 
 def _simhash_fp_rows_arrow(
@@ -561,22 +487,24 @@ def _simhash_fp_rows_arrow(
     text_col: str,
     n_bits: int,
 ) -> DataFrame:
-    """md5-family SimHash fingerprints in ONE Arrow pass — bit-identical
-    to the explode + per-token md5 + n_bits signed-bit-sum aggregation
-    (the bit of digit ``n_digits-1-(b//4)`` at ``b%4`` is bit ``b`` of
-    the first ``n_digits`` hex chars read as an integer), but each
-    DISTINCT token's ±1 bit vector is computed once per partition via
-    a memo instead of once per occurrence (token frequencies are Zipf
-    — same argument as :func:`_minhash_sig_rows_arrow`).  Token
-    multiplicity still counts: sums accumulate over OCCURRENCES,
-    exactly like the JVM sum aggregate.  NULL text emits no row
-    (explode over a NULL split); empty text tokenizes to [""] and
-    gets a fingerprint, both matching the JVM path."""
+    """md5-family SimHash fingerprints in ONE Arrow pass: bit ``b`` of
+    a token is bit ``b`` of the first ``n_bits/4`` hex digits of
+    md5(token) read as an integer, and the fingerprint sets bit ``b``
+    where the signed sum over the doc's token OCCURRENCES is positive
+    — exactly what the DuckDB oracle replays
+    (``__spark_entry__._sql_simhash_fp_cte``).  Each DISTINCT token's
+    ±1 bit vector is computed once per partition via a memo (capped
+    at ``_SIMHASH_MEMO_CAP`` entries) instead of once per occurrence
+    (token frequencies are Zipf — same argument as
+    :func:`_minhash_sig_rows_arrow`).  NULL text emits no row; empty
+    text tokenizes to [""] and gets a fingerprint, matching the
+    oracle's ``unnest(string_split(text, ' '))``."""
     from ..functions.partitioning import spread_small_scan
 
     assert n_bits % 4 == 0 and n_bits <= 60  # sign-safe in BIGINT
     src = spread_small_scan(df.select(id_col, text_col))
     n_digits = n_bits // 4
+    memo_cap = _SIMHASH_MEMO_CAP
 
     def gen(batches):
         import hashlib
@@ -603,7 +531,7 @@ def _simhash_fp_rows_arrow(
                             [1 if (v >> b) & 1 else -1 for b in shifts],
                             dtype=np.int8,
                         )
-                        if len(memo) >= 1_000_000:
+                        if len(memo) >= memo_cap:
                             memo.clear()
                         memo[t] = vec
                     sums += vec
@@ -629,73 +557,49 @@ def simhash_fingerprints(
     text_col: str = "text",
     hash_family: str = "xxhash64",
     n_bits: int = 64,
-    impl: str = "auto",
 ) -> DataFrame:
-    """n-bit SimHash per document, entirely JVM-side: explode
-    space-split tokens, hash each, and for every bit position sum
-    +1/-1 across tokens; the fingerprint re-assembles the sign bits.
-    Near-duplicates are pairs with small hamming distance
-    (``bit_count(x ^ y)``) — see :func:`simhash_pairs`.
+    """n-bit SimHash per document: hash each space-split token, and
+    for every bit position sum +1/-1 across tokens; the fingerprint
+    re-assembles the sign bits.  Near-duplicates are pairs with small
+    hamming distance (``bit_count(x ^ y)``) — see :func:`simhash_pairs`.
 
     ``hash_family='md5'`` derives the token bits from the md5 hex
     digits (bit b lives in digit ``n_bits//4 - b//4``), so a DuckDB
     oracle reproduces the fingerprints exactly; with md5 use
     ``n_bits<=60`` so the fingerprint stays positive in a signed
-    BIGINT on both engines (xxhash64 uses the native 64 bits).
+    BIGINT on both engines.  It is built by the memoized Arrow pass
+    :func:`_simhash_fp_rows_arrow` (each distinct token hashed once
+    per partition instead of once per occurrence — r7, guide §4).
 
-    ``impl``: ``'auto'`` (default) uses the memoized Arrow twin
-    :func:`_simhash_fp_rows_arrow` for the md5 family (identical
-    fingerprints, each distinct token hashed once per partition
-    instead of once per occurrence — r7, guide §4); ``'agg'`` forces
-    the JVM explode+sum build (the equivalence pin's reference).
-    xxhash64 always uses the JVM build (native 8-byte hashing is not
-    the bottleneck, and this container has no python xxhash64 twin).
+    ``xxhash64`` uses the native 64 bits and stays JVM-side (explode
+    tokens -> xxhash64 -> n_bits signed bit sums): native 8-byte
+    hashing is not the bottleneck, and there is no python twin of
+    Spark's xxhash64 here.
     """
     from ..functions.partitioning import spread_small_scan
 
-    if impl not in ("auto", "agg"):
-        raise ValueError(f"unknown simhash impl {impl!r}")
-    if impl == "auto" and hash_family == "md5":
+    if hash_family == "md5":
         return _simhash_fp_rows_arrow(df, id_col, text_col, n_bits)
-
+    if hash_family != "xxhash64":
+        raise ValueError(f"unknown hash_family {hash_family!r}")
+    assert n_bits <= 64
     # r7: the token explode + per-token hashing + n_bits partial sums
     # all run map-side — spread the single-split bench scan first
-    tok = spread_small_scan(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("_id"), F.explode(F.split(F.col(text_col), " ")).alias("_t")
+    tok = (
+        spread_small_scan(df.select(id_col, text_col))
+        .select(
+            F.col(id_col).alias("_id"),
+            F.explode(F.split(F.col(text_col), " ")).alias("_t"),
+        )
+        .select("_id", F.xxhash64("_t").alias("_h"))
     )
-    if hash_family == "xxhash64":
-        assert n_bits <= 64
-        tok = tok.withColumn("_h", F.xxhash64("_t"))
-        bit = [
+    aggs = [
+        F.sum(
             F.when(
                 F.col("_h").bitwiseAND(F.shiftleft(F.lit(1).cast("long"), b)) != 0, 1
-            ).otherwise(0)
-            for b in range(n_bits)
-        ]
-    elif hash_family == "md5":
-        assert n_bits % 4 == 0 and n_bits <= 60  # sign-safe in BIGINT
-        n_digits = n_bits // 4
-        tok = tok.withColumn("_h", F.md5("_t"))
-        # digit j (1-based from the left of the first n_digits hex
-        # chars) carries bits 4*(n_digits-j)+3 .. 4*(n_digits-j).
-        # Digits are MATERIALIZED as columns so each conv/substring
-        # evaluates once per token, not once per bit (4x per digit)
-        tok = tok.select(
-            "_id",
-            *[
-                F.conv(F.substring("_h", j, 1), 16, 10).cast("int").alias(f"_d{j}")
-                for j in range(1, n_digits + 1)
-            ],
-        )
-        digits = [F.col(f"_d{j}") for j in range(1, n_digits + 1)]
-        bit = [
-            F.shiftright(digits[n_digits - 1 - (b // 4)], b % 4).bitwiseAND(F.lit(1))
-            for b in range(n_bits)
-        ]
-    else:
-        raise ValueError(f"unknown hash_family {hash_family!r}")
-    aggs = [
-        F.sum(F.when(bit[b] == 1, 1).otherwise(-1)).alias(f"b{b}") for b in range(n_bits)
+            ).otherwise(-1)
+        ).alias(f"b{b}")
+        for b in range(n_bits)
     ]
     sums = tok.groupBy("_id").agg(*aggs)
     fp = reduce(
@@ -707,13 +611,6 @@ def simhash_fingerprints(
         F.lit(0).cast("long"),
     )
     return sums.select(F.col("_id").alias(id_col), fp.alias("simhash"))
-
-
-def simhash64(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Back-compat alias: 64-bit xxhash64-family SimHash."""
-    return simhash_fingerprints(df, id_col, text_col, "xxhash64", 64)
 
 
 def simhash_pairs(
@@ -912,7 +809,6 @@ def write_band_index(
     n_bands: int = 16,
     hash_family: str = "xxhash64",
     n_buckets: int = 32,
-    shingle_impl: str = "arrow",
 ) -> None:
     """Persist the FUZZY-dedup state for a document batch — the
     MinHash analog of :func:`write_digest_index`, and the third leg of
@@ -933,19 +829,9 @@ def write_band_index(
     Band signatures come from the SAME ``_band_signatures`` build as
     :func:`minhash_lsh_pairs`, so cross-batch collisions are
     bit-identical to a full-corpus run."""
-    ex = shingle_rows(docs, id_col, text_col, k, impl=shingle_impl)
-    # r7: on the md5/arrow path _band_signatures re-shingles from
-    # ``docs`` inside its own Arrow pass and never reads ``ex`` — the
-    # shingle table then has exactly ONE consumer (the shingles write)
-    # and a persist would only add a cache-write pass.  The JVM-agg
-    # path consumes ``ex`` twice (signature agg + shingles write), so
-    # it keeps the persist.
-    arrow_sigs = docs is not None and hash_family == "md5"
-    if not arrow_sigs:
-        ex = ex.persist()
-    banded = _band_signatures(
-        ex, n_hashes, n_bands, hash_family,
-        docs=docs, id_col=id_col, text_col=text_col, k=k,
+    cached: list = []
+    ex, banded = _band_signatures(
+        docs, id_col, text_col, k, n_hashes, n_bands, hash_family, cached
     )
 
     def _write(df: DataFrame, part_col: str, sub: str) -> None:
@@ -957,31 +843,35 @@ def write_band_index(
             .parquet(path.rstrip("/") + "/" + sub)
         )
 
-    if arrow_sigs:
-        # the two writes share no lineage here (bands come from the
-        # Arrow doc pass, shingles from ``ex``) — submit them from two
-        # driver threads so the second job back-fills the first's tail
-        # (guide §2.6); output files are identical either way.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        # pass the SESSION so job tags/local properties are inherited
-        # by the worker threads (the bare-callable form warns and
-        # drops tags on Spark 4)
-        wrap = inheritable_thread_target(docs.sparkSession)
-        jobs = (
-            lambda: _write(banded, "_sig", "bands"),
-            lambda: _write(ex, "_id", "shingles"),
-        )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(wrap(j)) for j in jobs]
-            for f in futs:
-                f.result()
-    else:
+    if cached:
+        # the signatures were aggregated from the cached shingle
+        # table: write sequentially so the second job reads the cache
+        # the first one filled, then release it
         _write(banded, "_sig", "bands")
         _write(ex, "_id", "shingles")
-        ex.unpersist()
+        for c in cached:
+            c.unpersist()
+        return
+    # the two writes share no lineage (bands come from the Arrow doc
+    # pass, shingles from ``ex``) — submit them from two driver
+    # threads so the second job back-fills the first's tail (guide
+    # §2.6); output files are identical either way.
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    # pass the SESSION so job tags/local properties are inherited by
+    # the worker threads (the bare-callable form warns and drops tags
+    # on Spark 4)
+    wrap = inheritable_thread_target(docs.sparkSession)
+    jobs = (
+        lambda: _write(banded, "_sig", "bands"),
+        lambda: _write(ex, "_id", "shingles"),
+    )
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [pool.submit(wrap(j)) for j in jobs]
+        for f in futs:
+            f.result()
 
 
 def compact_band_index(
@@ -1023,7 +913,6 @@ def incremental_lsh_pairs(
     threshold: float = 0.5,
     hash_family: str = "xxhash64",
     n_buckets: int = 32,
-    shingle_impl: str = "arrow",
     cleanup: list | None = None,
     stats_out: dict | None = None,
 ) -> DataFrame:
@@ -1050,23 +939,18 @@ def incremental_lsh_pairs(
     (bounded by the collision count, not the corpus).  Nothing
     re-shuffles history.  ``new_docs`` must be disjoint from indexed
     docs — run :func:`filter_new_digests` first, same contract as the
-    digest index.  ``cleanup``: receives the persisted new-batch
-    shingle index (same contract as :func:`minhash_lsh_pairs`).
+    digest index.  ``cleanup``: receives the persisted intermediates
+    (same contract as :func:`minhash_lsh_pairs`).
     ``stats_out``: receives the probe/confirm scan plans
     (``bands_plan``/``shingles_plan``) so tests and plan audits can
     assert the partition filters engaged."""
-    from pyspark import StorageLevel
-
     spark = new_docs.sparkSession
-    ex_new = shingle_rows(new_docs, id_col, text_col, k, impl=shingle_impl).persist(
-        StorageLevel.MEMORY_AND_DISK
+    ex_new, banded_new = _band_signatures(
+        new_docs, id_col, text_col, k, n_hashes, n_bands, hash_family, cleanup
     )
-    if cleanup is not None:
-        cleanup.append(ex_new)
-    banded_new = _band_signatures(
-        ex_new, n_hashes, n_bands, hash_family,
-        docs=new_docs, id_col=id_col, text_col=text_col, k=k,
-    ).withColumn("bucket", F.pmod(F.hash("_sig"), F.lit(n_buckets)))
+    banded_new = banded_new.withColumn(
+        "bucket", F.pmod(F.hash("_sig"), F.lit(n_buckets))
+    )
     # the new batch is the small side everywhere below; lineage-cut it
     # (band build = n_hashes aggregates re-analyzed per consumer) and
     # let the 2-col table broadcast.  The static pruning key (≤
@@ -1184,9 +1068,11 @@ def chunk_dedup(
     for a document whose every chunk first appeared elsewhere (the
     fully-boilerplate page that web dedup exists to drop).
 
-    Spark shape: chunking is pure higher-order functions inside
-    whole-stage codegen (sequence/transform/slice — the same
-    materialize-the-token-array-first rule as :func:`word_shingles`);
+    Spark shape: chunking is pure higher-order functions
+    (sequence/transform/slice) over a token array materialized as a
+    column FIRST — an inline ``split()`` referenced inside the lambda
+    is re-evaluated per element (no common-subexpression elimination
+    across lambda scopes), O(words²) per row;
     first-occurrence is a ``min_by`` AGGREGATE on ``md5(chunk)``
     (16-byte shuffle key, not the chunk text) joined back on the
     hash, NOT a row_number window: at web scale one universal

@@ -7,8 +7,9 @@ product); a 100 TB web-text corpus needs the downstream pass too.
 This composes the engine's existing stages in the standard
 CCNet/C4-style order:
 
-    1. cheap JVM stats  (lang-ID, quality ratios, token counts —
-       whole-stage codegen, runs at scan speed)
+    1. cheap stats      (lang-ID, quality ratios, token counts — one
+       Arrow pass emits the integer counts, the ratios derive
+       JVM-side from them)
     2. quality gate     (language allowlist, token-count band,
        stopword/distinct ratio floors — a pure Filter, pushed as far
        down as the expressions allow)
@@ -18,7 +19,7 @@ CCNet/C4-style order:
        components → keeper filter — the RefinedWeb/CCNet fuzzy pass)
     5. chunk-level dedup (CCNet first-occurrence boilerplate removal)
 
-Stage order is the cost argument: the JVM filter drops junk BEFORE
+Stage order is the cost argument: the gate filter drops junk BEFORE
 anything shuffles; exact dedup runs BEFORE chunking so whole-document
 duplicates are dropped at one-hash-per-doc cost instead of being
 exploded into chunks that all die anyway (and chunk_dedup's global
@@ -36,7 +37,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.textstats import lang_id, quality_features
 from .dedup import chunk_dedup
 
 
@@ -56,7 +56,6 @@ def prep_corpus(
     fuzzy_n_bands: int = 16,
     fuzzy_hash_family: str = "xxhash64",
     cleanup: list | None = None,
-    stats_impl: str = "auto",
 ) -> DataFrame:
     """Returns one row per SURVIVING document:
     ``(doc_id, text_prepped, lang, n_tokens, n_chunks, n_kept)``
@@ -88,34 +87,25 @@ def prep_corpus(
     # parquet scan at bench scale — spread first (no-op at real scan
     # widths)
     src = spread_small_scan(docs.select(id_col, text_col))
-    if stats_impl == "auto":
-        # r7 second pass: the expression gate duplicates the
-        # tokenize+distinct subtree ~50x (CollapseProject re-inlines
-        # any factoring; janino then refuses the giant method and the
-        # stage runs INTERPRETED).  One Arrow pass emits the exact
-        # integer counts; every float/round stays JVM-side, derived
-        # from those ints — bit-identical by construction
-        # (functions/textstats.gate_count_rows_arrow).
-        from ..functions.textstats import (
-            gate_count_rows_arrow,
-            gate_stats_from_counts,
-        )
+    # r7 second pass: the expression gate (textstats.lang_id +
+    # quality_features) duplicates the tokenize+distinct subtree ~50x
+    # (CollapseProject re-inlines any factoring; janino then refuses
+    # the giant method and the stage runs INTERPRETED).  One Arrow
+    # pass emits the exact integer counts; every float/round stays
+    # JVM-side, derived from those ints — bit-identical to the
+    # expressions by construction (pinned by
+    # test_gate_counts_arrow_matches_jvm_expressions).
+    from ..functions.textstats import (
+        gate_count_rows_arrow,
+        gate_stats_from_counts,
+    )
 
-        counts = gate_count_rows_arrow(src, id_col, text_col)
-        stats = counts.select(
-            F.col(id_col),
-            F.col(text_col),
-            *gate_stats_from_counts(counts, text_col),
-        )
-    elif stats_impl == "jvm":
-        stats = src.select(
-            F.col(id_col),
-            F.col(text_col),
-            lang_id(text_col).alias("lang"),
-            *quality_features(text_col),
-        )
-    else:
-        raise ValueError(f"unknown stats_impl {stats_impl!r}")
+    counts = gate_count_rows_arrow(src, id_col, text_col)
+    stats = counts.select(
+        F.col(id_col),
+        F.col(text_col),
+        *gate_stats_from_counts(counts, text_col),
+    )
     # persist the stat table (r7 third pass): the keeper semi-join
     # below references `gated` on BOTH sides (payload + exact_dedup's
     # aggregation input), and the plan audit showed the gate's Arrow

@@ -317,27 +317,25 @@ def lsh_bucket_signatures(
     n_planes: int = 8,
     n_tables: int = 4,
     hash_family: str = "xxhash64",
-    impl: str = "auto",
 ) -> DataFrame:
     """(id, table, bucket) — sign pattern of n_planes projections per
     table.
 
-    impl='expr': projections unroll to JVM expressions over array
-    elements (element_at), fully codegen'd; no UDF, no shuffle.  The
-    unrolled plan is dim × n_planes × n_tables terms — past a few
-    thousand terms whole-stage codegen falls over, so impl='auto'
-    switches to impl='pandas' above dim 128: an Arrow-batched
-    mapInPandas that accumulates the SAME left-fold sum (loop over
-    dims, identical double rounding) with plane weights evaluated
-    once on the JVM — bit-identical buckets, tested at dim 64
-    (tests/test_scale_paths.py)."""
-    if impl == "auto":
-        # the unrolled path emits dim×planes (×tables branches) terms;
-        # past ~1k total terms janino compile time dominates the query
-        # (measured: 44s vs 4s at dim 64 × 6 planes × 8 tables), and
-        # past a few thousand codegen fails outright — the Arrow path
-        # is bit-identical (tests pin it), so prefer it early
-        impl = "pandas" if dim > 128 or dim * n_planes * n_tables > 1024 else "expr"
+    Small plans (dim <= 128 and at most 1024 dim × n_planes ×
+    n_tables terms) unroll the projections to JVM expressions over
+    array elements (element_at), fully codegen'd; no UDF, no shuffle.
+    Past that, whole-stage codegen falls over, so larger plans run an
+    Arrow-batched mapInPandas (:func:`_lsh_signatures_pandas`) that
+    accumulates the SAME left-fold sum (loop over dims, identical
+    double rounding) with plane weights evaluated once on the JVM —
+    bit-identical buckets, pinned by
+    ``test_lsh_signatures_pandas_equals_expr``."""
+    # the unrolled path emits dim×planes (×tables branches) terms;
+    # past ~1k total terms janino compile time dominates the query
+    # (measured: 44s vs 4s at dim 64 × 6 planes × 8 tables), and past
+    # a few thousand codegen fails outright — the Arrow path is
+    # bit-identical, so prefer it early
+    use_pandas = dim > 128 or dim * n_planes * n_tables > 1024
     from ..functions.partitioning import spread_small_scan
 
     v = _as_double(F.col(vec_col))
@@ -346,7 +344,7 @@ def lsh_bucket_signatures(
     # scale — spread it first (no-op at real scan widths)
     out = spread_small_scan(df.select(F.col(id_col).alias("_id"), v.alias("_v")))
     W = _plane_weights(df.sparkSession, dim, n_planes, n_tables, hash_family)
-    if impl == "pandas":
+    if use_pandas:
         return _lsh_signatures_pandas(out, dim, n_planes, n_tables, W)
     rows = []
     for t in range(n_tables):
@@ -664,7 +662,6 @@ def cosine_topk_lsh(
     n_planes: int = 8,
     n_tables: int = 4,
     hash_family: str = "xxhash64",
-    impl: str = "auto",
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: LSH bucket collisions -> exact cosine
@@ -676,10 +673,10 @@ def cosine_topk_lsh(
     true neighbors in OTHER tables).  Recall-only effect; mirror in
     any oracle."""
     qs = lsh_bucket_signatures(
-        queries, id_col, vec_col, dim, n_planes, n_tables, hash_family, impl
+        queries, id_col, vec_col, dim, n_planes, n_tables, hash_family
     )
     cs = lsh_bucket_signatures(
-        corpus, id_col, vec_col, dim, n_planes, n_tables, hash_family, impl
+        corpus, id_col, vec_col, dim, n_planes, n_tables, hash_family
     )
     if bucket_cap is not None:
         keep = (

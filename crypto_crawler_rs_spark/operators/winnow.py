@@ -15,10 +15,12 @@ Reference analog: the frame-level dedup of replayed websocket streams
 (crypto-ws-client reconnect replay discards already-seen frames by
 content) — applied at sub-document granularity.
 
-Scale shape: fingerprint selection is a per-row array pipeline
-(tokens -> k-gram md5 strings -> per-window ``array_min`` -> distinct)
-— zero shuffle, zero UDF, whole-stage codegen.  Pair detection is the
-dedup family's inverted-index discipline: explode selected
+Scale shape: fingerprint selection is one Arrow-batched
+``mapInPandas`` pass (tokens -> k-gram md5 strings -> per-window min
+-> distinct) — zero shuffle; a pure-JVM higher-order-function build
+is interpreted per element and measured ~12x slower at sf0.1, the
+same stay-JVM exception as ``dedup.shingle_rows``.  Pair detection
+is the dedup family's inverted-index discipline: explode selected
 fingerprints, df-cap the stop-fingerprints (the fanout guard, same as
 ``ngram_jaccard_pairs``), equi-join on the fingerprint — banded, never
 all-pairs.  Hashes are md5 hex strings so the DuckDB oracle replays
@@ -42,106 +44,59 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 4,
     w: int = 4,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Returns ``(id_col, fingerprints)``: the document's DISTINCT
     selected k-gram hashes (md5 hex of space-joined k-token grams),
     one min per sliding window of ``w`` grams.  Documents shorter
-    than k tokens get an empty array.
+    than k tokens get an empty array; documents with fewer than ``w``
+    grams keep their single min.  The id field keeps the caller's
+    type.
 
-    Two implementations with IDENTICAL output (pinned by
-    ``test_winnow_impls_equivalent``): ``impl='hof'`` is pure JVM
-    (zip_with of shifted slices — zero shuffle, zero python), but
-    higher-order functions are INTERPRETED per element and the md5
-    transform is re-evaluated once per window-shift, measured 24.7s
-    at sf0.1; ``impl='arrow'`` (default) does the same selection over
-    Arrow batches in python (~2s) — the same stay-JVM exception the
-    repo already measured for ``shingle_rows``."""
-    if impl == "arrow":
-        def gen(batches):
-            import hashlib
+    One Arrow-batched python pass: ~2s at sf0.1, where a JVM
+    higher-order-function build, interpreted per element, took 24.7s.
+    Pinned against a brute-force python twin by
+    ``test_fingerprints_match_python_twin``."""
 
-            import pandas as pd
+    def gen(batches):
+        import hashlib
 
-            for pdf in batches:
-                ids, fps = [], []
-                for did, text in zip(pdf[id_col], pdf[text_col]):
-                    toks = (text or "").strip().split()
-                    grams = [
-                        hashlib.md5(
-                            " ".join(toks[i : i + k]).encode()
-                        ).hexdigest()
-                        for i in range(len(toks) - k + 1)
-                    ]
-                    if not grams:
-                        sel = []
-                    elif len(grams) < w:
-                        sel = [min(grams)]
-                    else:
-                        sel = list(
-                            dict.fromkeys(
-                                min(grams[j : j + w])
-                                for j in range(len(grams) - w + 1)
-                            )
+        import pandas as pd
+
+        for pdf in batches:
+            ids, fps = [], []
+            for did, text in zip(pdf[id_col], pdf[text_col]):
+                toks = (text or "").strip().split()
+                grams = [
+                    hashlib.md5(
+                        " ".join(toks[i : i + k]).encode()
+                    ).hexdigest()
+                    for i in range(len(toks) - k + 1)
+                ]
+                if not grams:
+                    sel = []
+                elif len(grams) < w:
+                    sel = [min(grams)]
+                else:
+                    sel = list(
+                        dict.fromkeys(
+                            min(grams[j : j + w])
+                            for j in range(len(grams) - w + 1)
                         )
-                    ids.append(did)
-                    fps.append(sel)
-                yield pd.DataFrame({id_col: ids, "fingerprints": fps})
+                    )
+                ids.append(did)
+                fps.append(sel)
+            yield pd.DataFrame({id_col: ids, "fingerprints": fps})
 
-        # the id field keeps the CALLER's type (ADVICE r5): a
-        # hardcoded `long` broke/miscast string or int doc ids while
-        # the hof impl preserved them — the two impls are documented
-        # identical, so the arrow schema must be derived too
-        id_type = df.schema[id_col].dataType.simpleString()
-        # r7: one md5 per k-gram in python — spread the single-split
-        # bench scan so the pass uses every core (no-op at scan width)
-        from ..functions.partitioning import spread_small_scan
+    # the id field keeps the CALLER's type (ADVICE r5): a hardcoded
+    # `long` broke/miscast string or int doc ids
+    id_type = df.schema[id_col].dataType.simpleString()
+    # r7: one md5 per k-gram in python — spread the single-split
+    # bench scan so the pass uses every core (no-op at scan width)
+    from ..functions.partitioning import spread_small_scan
 
-        return spread_small_scan(df.select(id_col, text_col)).mapInPandas(
-            gen, schema=f"{id_col} {id_type}, fingerprints array<string>"
-        )
-    if impl != "hof":
-        raise ValueError(f"unknown winnow impl {impl!r}")
-    # INTERPRETED-HOF CAUTION (the r5 bench stall): an outer-column
-    # reference INSIDE a lambda is re-evaluated per element — a naive
-    # `array_min(slice(grams, i+1, w))` per window recomputes ALL n
-    # gram md5s for EVERY window = O(n²) md5s per row (~30 min single
-    # stage at sf0.1).  Instead every n-ary combine below is built
-    # from SHIFTED SLICES zipped pairwise, so each outer array is
-    # referenced a constant number of times: O((k+w)·n) per row.
-    t = F.split(F.trim(F.col(text_col)), r"\s+")
-    n = F.size(t)
-    n_grams = F.greatest(n - F.lit(k - 1), F.lit(0))
-
-    def shifted_zip(arr, width: int, length, combine):
-        out = F.slice(arr, 1, length)
-        for j in range(1, width):
-            out = F.zip_with(out, F.slice(arr, 1 + j, length), combine)
-        return out
-
-    # k-gram strings: zip the k shifted token slices with concat
-    gram_strs = shifted_zip(
-        t, k, n_grams, lambda a, b: F.concat(a, F.lit(" "), b)
+    return spread_small_scan(df.select(id_col, text_col)).mapInPandas(
+        gen, schema=f"{id_col} {id_type}, fingerprints array<string>"
     )
-    grams = F.transform(gram_strs, lambda s: F.md5(s.cast("binary")))
-    # lengths derived from the TOKEN count, not size(grams): a
-    # size(grams) operand inside each slice would re-run the whole
-    # gram pipeline once per slice (same interpreted-HOF trap)
-    n_windows = F.greatest(n - F.lit(k + w - 2), F.lit(0))
-    # per-window min: zip the w shifted gram slices with least
-    selected = shifted_zip(
-        grams, w, n_windows, lambda a, b: F.least(a, b)
-    )
-    # short docs (k <= tokens < k+w-1): fewer grams than a window —
-    # keep their single min so passages at doc granularity still match
-    short = F.when(
-        (n_grams > 0) & (n_windows == 0),
-        F.array(F.array_min(grams)),
-    )
-    fps = F.coalesce(
-        F.when(n_windows > 0, F.array_distinct(selected)), short, F.array()
-    )
-    return df.select(id_col, fps.alias("fingerprints"))
 
 
 def winnow_passage_pairs(
@@ -152,7 +107,6 @@ def winnow_passage_pairs(
     w: int = 4,
     min_shared: int = 2,
     df_cap: int = 100,
-    impl: str = "arrow",
     key_family: str = "string",
     cleanup: list | None = None,
 ) -> DataFrame:
@@ -178,7 +132,7 @@ def winnow_passage_pairs(
     if key_family not in ("string", "xxhash64"):
         raise ValueError(f"key_family must be string|xxhash64, got {key_family!r}")
     fp = (
-        winnow_fingerprints(df, id_col, text_col, k, w, impl=impl)
+        winnow_fingerprints(df, id_col, text_col, k, w)
         .select(F.col(id_col).alias("_id"), F.explode("fingerprints").alias("_fp"))
     )
     if key_family == "xxhash64":

@@ -9,9 +9,8 @@
 3. the seenjoin IPC cache defaults to a per-uid 0700 directory and
    refuses a directory with foreign ownership / group-or-world access
    (another user could plant/evict .arrow files in a shared path).
-4. winnow_fingerprints(impl='arrow') preserves the caller's id type
-   (previously hardcoded `long`, breaking string/int doc ids while
-   the hof impl preserved them).
+4. winnow_fingerprints preserves the caller's id type (previously
+   hardcoded `long`, breaking string/int doc ids).
 """
 
 from __future__ import annotations
@@ -160,22 +159,23 @@ def test_ipc_cache_dir_per_user_and_permission_checked(
     assert p2 is not None and os.path.dirname(p2) == str(opt)
 
 
-# -- 4: winnow arrow impl preserves the id type ------------------------
+# -- 4: winnow fingerprints preserve the id type ----------------------
 
 @pytest.mark.parametrize(
     "ids,typ",
     [(["d1", "d2"], "string"), ([7, 9], "int")],
 )
 def test_winnow_arrow_preserves_id_type(spark, ids, typ):
+    import hashlib
+
     from crypto_crawler_rs_spark.operators.winnow import winnow_fingerprints
 
-    df = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog") for i in ids],
-        f"doc_id {typ}, text string",
-    )
-    arrow = winnow_fingerprints(df, impl="arrow")
-    hof = winnow_fingerprints(df, impl="hof")
-    assert arrow.schema["doc_id"].dataType == df.schema["doc_id"].dataType
-    a = {r.doc_id: sorted(r.fingerprints) for r in arrow.collect()}
-    h = {r.doc_id: sorted(r.fingerprints) for r in hof.collect()}
-    assert a == h and set(a) == set(ids)
+    text = "the quick brown fox jumps over the lazy dog"
+    df = spark.createDataFrame([(i, text) for i in ids], f"doc_id {typ}, text string")
+    out = winnow_fingerprints(df)
+    assert out.schema["doc_id"].dataType == df.schema["doc_id"].dataType
+    toks = text.split()
+    grams = [hashlib.md5(" ".join(toks[i : i + 4]).encode()).hexdigest() for i in range(6)]
+    want = sorted({min(grams[j : j + 4]) for j in range(3)})
+    got = {r.doc_id: sorted(r.fingerprints) for r in out.collect()}
+    assert got == {i: want for i in ids}

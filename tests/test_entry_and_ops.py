@@ -61,14 +61,14 @@ def test_minhash_lsh_subset_of_exact_jaccard(spark):
 
 
 def test_simhash_close_for_near_identical_docs(spark):
-    from crypto_crawler_rs_spark.operators.dedup import simhash64
+    from crypto_crawler_rs_spark.operators.dedup import simhash_fingerprints
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 10
     df = spark.createDataFrame(
         [(1, base), (2, base + " omega"), (3, "totally different words here now")],
         "doc_id long, text string",
     )
-    fps = {r.doc_id: r.simhash for r in simhash64(df).collect()}
+    fps = {r.doc_id: r.simhash for r in simhash_fingerprints(df).collect()}
     ham = lambda a, b: bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
     assert ham(fps[1], fps[2]) <= 8  # near-dup -> close fingerprints
     assert ham(fps[1], fps[3]) > 12  # different docs -> far apart

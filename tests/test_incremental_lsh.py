@@ -217,12 +217,11 @@ def test_write_band_index_threaded_arrow_matches_jvm_agg_build(spark, tmp_path):
     threads and skips the shingle-table persist (single consumer);
     the xxhash64 build keeps the sequential persist path.  Both must
     produce per-bucket hive layouts whose CONTENT matches the shared
-    _band_signatures / shingle_rows definitions exactly."""
+    _band_signatures build exactly."""
     import os
 
     from crypto_crawler_rs_spark.operators.dedup import (
         _band_signatures,
-        shingle_rows,
         write_band_index,
     )
 
@@ -241,13 +240,12 @@ def test_write_band_index_threaded_arrow_matches_jvm_agg_build(spark, tmp_path):
             (int(r._id), int(r._band), str(r._sig))
             for r in spark.read.parquet(f"{idx}/bands").collect()
         )
-        ex = shingle_rows(docs, "doc_id", "text", 3)
+        cached = []
+        ex, banded = _band_signatures(docs, "doc_id", "text", 3, 16, 8, fam, cached)
+        # the shingle table is cached exactly when the signatures read it
+        assert len(cached) == (fam == "xxhash64"), fam
         want_bands = sorted(
-            (int(r._id), int(r._band), str(r._sig))
-            for r in _band_signatures(
-                ex, 16, 8, fam, docs=docs, id_col="doc_id",
-                text_col="text", k=3,
-            ).collect()
+            (int(r._id), int(r._band), str(r._sig)) for r in banded.collect()
         )
         assert got_bands == want_bands, fam
         got_sh = sorted(
@@ -258,3 +256,5 @@ def test_write_band_index_threaded_arrow_matches_jvm_agg_build(spark, tmp_path):
             (int(r._id), int(r._n), str(r._s)) for r in ex.collect()
         )
         assert got_sh == want_sh, fam
+        for c in cached:
+            c.unpersist()

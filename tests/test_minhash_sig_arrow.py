@@ -1,25 +1,60 @@
-"""r7 optimization pin: the memoized Arrow MinHash signature pass
-(_minhash_sig_rows_arrow, used by _band_signatures when the caller
-passes the source docs and the family is md5) is bit-identical to the
-original groupBy(min(seeded md5)) JVM aggregation — same shingling,
-same UTF-8 md5 hex, same string min order — including the degenerate
-docs (under k words, empty, NULL text) that must emit no row."""
+"""r7 optimization pins for the memoized md5 Arrow builders of
+operators/dedup.py, each against an independent reference — including
+the degenerate docs (under k words, empty, NULL text) and a vocabulary
+past the memo caps:
+
+* _minhash_sig_rows_arrow (the md5 MinHash signatures) against the
+  groupBy(min(md5('mh{i}#' || shingle))) JVM aggregation the DuckDB
+  oracle replays — same shingling, same UTF-8 md5 hex, same string
+  min order;
+* _simhash_fp_rows_arrow (the md5 SimHash fingerprints) against the
+  DuckDB replay __spark_entry__._sql_simhash_fp_cte — the grading
+  oracle of the simhash queries."""
 
 from __future__ import annotations
 
+import duckdb
+from pyspark.sql import functions as F
+
+import __spark_entry__ as entrymod
+from crypto_crawler_rs_spark.operators import dedup
 from crypto_crawler_rs_spark.operators.dedup import (
-    _band_signatures,
+    _minhash_sig_rows_arrow,
     shingle_rows,
+    simhash_fingerprints,
 )
 
 
-def _band_rows(ex, docs, n_hashes, n_bands):
-    old = _band_signatures(ex, n_hashes, n_bands, "md5")
-    new = _band_signatures(ex, n_hashes, n_bands, "md5", docs=docs)
-    return (
-        sorted(map(tuple, old.collect())),
-        sorted(map(tuple, new.collect())),
+def _sig_rows(docs, n_hashes):
+    """(arrow, JVM-agg) md5 MinHash signature rows, sorted."""
+    ex = shingle_rows(docs, "doc_id", "text", 3)
+    jvm = ex.groupBy("_id").agg(
+        *[
+            F.min(F.md5(F.concat(F.lit(f"mh{i}#"), F.col("_s")))).alias(f"h{i}")
+            for i in range(n_hashes)
+        ]
     )
+    arrow = _minhash_sig_rows_arrow(docs, "doc_id", "text", 3, n_hashes)
+    assert arrow.columns == jvm.columns
+    return (
+        sorted(map(tuple, arrow.collect())),
+        sorted(map(tuple, jvm.collect())),
+    )
+
+
+def _simhash_rows(docs):
+    """(Spark md5/60-bit, DuckDB replay) SimHash rows, sorted."""
+    got = sorted(
+        map(tuple, simhash_fingerprints(docs, hash_family="md5", n_bits=60).collect())
+    )
+    con = duckdb.connect()
+    con.register("documents", docs.select("doc_id", "text").toPandas())
+    want = sorted(
+        con.execute(
+            f"WITH {entrymod._sql_simhash_fp_cte()} SELECT doc_id, simhash FROM fp"
+        ).fetchall()
+    )
+    return got, want
 
 
 def test_arrow_sig_path_matches_jvm_agg(spark):
@@ -30,15 +65,14 @@ def test_arrow_sig_path_matches_jvm_agg(spark):
         "concat_ws(' ', 'tok', cast(id % 7 as string), 'a b c d e', "
         "cast(id % 3 as string), 'x y z') as text",
     )
-    ex = shingle_rows(docs, "doc_id", "text", 3)
-    o, n = _band_rows(ex, docs, 16, 8)
-    assert len(o) == 400 * 8
-    assert o == n
+    a, j = _sig_rows(docs, 16)
+    assert len(a) == 400
+    assert a == j
 
 
 def test_simhash_arrow_twin_matches_jvm_agg(spark):
-    from crypto_crawler_rs_spark.operators.dedup import simhash_fingerprints
-
+    """The reference is the DuckDB replay of the signed bit-sum
+    aggregation over token occurrences."""
     docs = spark.range(0, 300).selectExpr(
         "id as doc_id",
         # repeated tokens both within and across docs: multiplicity
@@ -46,36 +80,47 @@ def test_simhash_arrow_twin_matches_jvm_agg(spark):
         "concat_ws(' ', 'alpha', cast(id % 5 as string), 'beta beta', "
         "cast(id % 2 as string), 'gamma') as text",
     )
-    o = sorted(
-        map(tuple, simhash_fingerprints(docs, hash_family="md5", n_bits=60, impl="agg").collect())
-    )
-    n = sorted(
-        map(tuple, simhash_fingerprints(docs, hash_family="md5", n_bits=60, impl="auto").collect())
-    )
-    assert len(o) == 300
-    assert o == n
+    got, want = _simhash_rows(docs)
+    assert len(got) == 300
+    assert got == want
 
 
 def test_simhash_arrow_twin_degenerate_docs(spark):
-    from crypto_crawler_rs_spark.operators.dedup import simhash_fingerprints
-
     docs = spark.createDataFrame(
         [
             (1, ""),       # split('', ' ') == [''] -> one empty token, HAS a row
-            (2, None),     # NULL text -> no exploded rows -> NO fingerprint row
+            (2, None),     # NULL text -> no tokens -> NO fingerprint row
             (3, "x  y"),   # double space -> empty middle token
             (4, "a a b"),  # within-doc multiplicity
+            (5, "a b "),   # trailing space -> trailing empty token
         ],
         "doc_id long, text string",
     )
-    o = sorted(
-        map(tuple, simhash_fingerprints(docs, hash_family="md5", n_bits=60, impl="agg").collect())
+    got, want = _simhash_rows(docs)
+    assert {r[0] for r in got} == {1, 3, 4, 5}
+    assert got == want
+
+
+def test_memo_caps_past_vocabulary(spark, monkeypatch):
+    """Both memos are cleared when they reach their cap; a vocabulary
+    far past a cap of 3 entries (a Zipf tail past the real caps) must
+    leave signatures and fingerprints unchanged."""
+    monkeypatch.setattr(dedup, "_MINHASH_MEMO_CAP", 3)
+    monkeypatch.setattr(dedup, "_SIMHASH_MEMO_CAP", 3)
+    docs = spark.range(0, 200).selectExpr(
+        "id as doc_id",
+        # a head of repeated tokens (memo hits between clears) and a
+        # tail of per-doc tokens (the vocabulary runs past the cap)
+        "concat_ws(' ', 'the', concat('w', cast(id as string)), 'of', "
+        "concat('v', cast(id % 11 as string)), 'the of', "
+        "concat('w', cast(id + 1 as string))) as text",
     )
-    n = sorted(
-        map(tuple, simhash_fingerprints(docs, hash_family="md5", n_bits=60, impl="auto").collect())
-    )
-    assert {r[0] for r in o} == {1, 3, 4}
-    assert o == n
+    a, j = _sig_rows(docs, 8)
+    assert len(a) == 200
+    assert a == j
+    got, want = _simhash_rows(docs)
+    assert len(got) == 200
+    assert got == want
 
 
 EDGE_TEXTS = [
@@ -117,7 +162,10 @@ def test_gate_counts_arrow_matches_jvm_expressions(spark):
         "concat_ws(' ', 'the and of', cast(id % 9 as string), 'para um la', "
         "repeat('tok ', cast(id % 7 as int))) as text",
     )
-    for docs in (edge, gen):
+    corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+        "doc_id", "text"
+    )
+    for docs in (edge, gen, corpus):
         jvm = docs.select(
             "doc_id", "text", lang_id("text").alias("lang"), *quality_features("text")
         )
@@ -125,17 +173,6 @@ def test_gate_counts_arrow_matches_jvm_expressions(spark):
         arr = c.select(F.col("doc_id"), F.col("text"), *gate_stats_from_counts(c))
         assert jvm.columns == arr.columns
         assert sorted(map(tuple, jvm.collect())) == sorted(map(tuple, arr.collect()))
-
-
-def test_prep_corpus_stats_impls_equal(spark, ):
-    from crypto_crawler_rs_spark.operators.prep import prep_corpus
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    kw = dict(langs=("en",), min_tokens=20, min_distinct_ratio=0.4,
-              min_stopword_ratio=0.0)
-    a = sorted(map(tuple, prep_corpus(docs, stats_impl="jvm", **kw).collect()))
-    b = sorted(map(tuple, prep_corpus(docs, stats_impl="auto", **kw).collect()))
-    assert a == b and len(a) > 0
 
 
 def test_unrolled_expr_dot_norm_match_reduce_fold(spark):
@@ -187,7 +224,6 @@ def test_arrow_sig_path_degenerate_docs(spark):
         ],
         "doc_id long, text string",
     )
-    ex = shingle_rows(docs, "doc_id", "text", 3)
-    o, n = _band_rows(ex, docs, 8, 4)
-    assert {r[0] for r in o} == {3, 5}
-    assert o == n
+    a, j = _sig_rows(docs, 8)
+    assert {r[0] for r in a} == {3, 5}
+    assert a == j

@@ -108,33 +108,42 @@ def test_simhash_md5_fingerprint_matches_python_twin(spark):
 
 def test_lsh_signatures_pandas_equals_expr(spark):
     """The high-dim mapInPandas path must produce bit-identical
-    buckets to the unrolled expression path (same left-fold order)."""
-    from crypto_crawler_rs_spark.operators.similarity import lsh_bucket_signatures
+    buckets to the unrolled expression path (same left-fold order).
+    At 64 dims × 4 planes × 4 tables lsh_bucket_signatures unrolls
+    expressions; the Arrow builder runs on the same input here."""
+    from crypto_crawler_rs_spark.operators.similarity import (
+        _as_double,
+        _lsh_signatures_pandas,
+        _plane_weights,
+        lsh_bucket_signatures,
+    )
 
     rng = np.random.default_rng(11)
     vecs = [(i, [float(x) for x in rng.normal(size=64)]) for i in range(40)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+    v = df.select(F.col("vec_id").alias("_id"), _as_double(F.col("embedding")).alias("_v"))
     for family in ("xxhash64", "md5"):
         a = lsh_bucket_signatures(
-            df, dim=64, n_planes=6, n_tables=4, hash_family=family, impl="expr"
-        ).toPandas().sort_values(["_id", "table"]).reset_index(drop=True)
-        b = lsh_bucket_signatures(
-            df, dim=64, n_planes=6, n_tables=4, hash_family=family, impl="pandas"
+            df, dim=64, n_planes=4, n_tables=4, hash_family=family
+        )
+        assert "MapInPandas" not in a._jdf.queryExecution().executedPlan().toString()
+        a = a.toPandas().sort_values(["_id", "table"]).reset_index(drop=True)
+        b = _lsh_signatures_pandas(
+            v, 64, 4, 4, _plane_weights(spark, 64, 4, 4, family)
         ).toPandas().sort_values(["_id", "table"]).reset_index(drop=True)
         pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_lsh_high_dim_no_codegen_blowup(spark):
-    """dim=768 must run via the pandas path (impl='auto') and return
-    sane buckets — the unrolled-expression path would hit codegen
-    limits here."""
+    """dim=768 must run via the pandas path and return sane buckets —
+    the unrolled-expression path would hit codegen limits here."""
     from crypto_crawler_rs_spark.operators.similarity import lsh_bucket_signatures
 
     rng = np.random.default_rng(13)
     vecs = [(i, [float(x) for x in rng.normal(size=768)]) for i in range(20)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
     out = lsh_bucket_signatures(
-        df, dim=768, n_planes=8, n_tables=2, hash_family="md5", impl="auto"
+        df, dim=768, n_planes=8, n_tables=2, hash_family="md5"
     ).toPandas()
     assert len(out) == 40  # 20 vectors x 2 tables
     assert out.bucket.str.len().eq(8).all()

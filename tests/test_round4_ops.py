@@ -91,11 +91,36 @@ def test_learned_codebook_train_sample(spark):
     assert (sims.max(axis=1) > 0.85).all(), sims.max(axis=1)
 
 
+def _jvm_shingle_rows(df, k=3):
+    """Independent pure-JVM reference for ``dedup.shingle_rows``:
+    Java ``split`` + higher-order functions (sequence/transform/slice)
+    + explode.  The token array is materialized as a column FIRST — an
+    inline ``split()`` inside the lambda is re-evaluated per element."""
+    words = F.col("_words")
+    n = F.greatest(F.size(words) - (k - 1), F.lit(0))
+    shingles = F.transform(
+        F.sequence(F.lit(1), n),
+        lambda i: F.concat_ws(" ", F.slice(words, i, k)),
+    )
+    sh = df.select(
+        "doc_id", F.split(F.col("text"), " ").alias("_words")
+    ).select(
+        "doc_id",
+        F.when(n > 0, F.array_distinct(shingles)).otherwise(F.array()).alias("sh"),
+    )
+    return sh.select(
+        F.col("doc_id").alias("_id"),
+        F.size("sh").alias("_n"),
+        F.explode("sh").alias("_s"),
+    )
+
+
 def test_shingle_impls_equivalent(spark):
-    """arrow and hof shingle_rows must emit the identical multiset of
-    (_id, _n, _s) rows — including the edge cases: empty text, double
-    spaces (empty tokens preserved), trailing space, < k words,
-    duplicate shingles collapsed."""
+    """The Arrow shingle_rows must emit the identical multiset of
+    (_id, _n, _s) rows as the JVM split + higher-order-function
+    reference — including the edge cases: empty text, double spaces
+    (empty tokens preserved), trailing space, < k words, duplicate
+    shingles collapsed, NULL text."""
     from crypto_crawler_rs_spark.operators.dedup import shingle_rows
 
     rows = [
@@ -108,38 +133,40 @@ def test_shingle_impls_equivalent(spark):
         (6, None),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = shingle_rows(df, impl="arrow").toPandas()
-    h = shingle_rows(df, impl="hof").toPandas()
     key = lambda p: sorted(map(tuple, p[["_id", "_n", "_s"]].values))
-    assert key(a) == key(h)
+    assert key(shingle_rows(df).toPandas()) == key(_jvm_shingle_rows(df).toPandas())
     # ...and on the real fixture corpus
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = shingle_rows(docs, impl="arrow").toPandas()
-    h = shingle_rows(docs, impl="hof").toPandas()
-    assert key(a) == key(h)
+    assert key(shingle_rows(docs).toPandas()) == key(
+        _jvm_shingle_rows(docs).toPandas()
+    )
 
 
 def test_minhash_cleanup_contract(spark):
     """minhash_lsh_pairs(cleanup=...) hands back its persisted
     intermediates so callers can unpersist — same contract
     ngram_jaccard_pairs got in r3 (long-lived sessions otherwise
-    accumulate cached partitions per invocation).  r7 added two more
-    persisted intermediates next to the shingle index (the banded
-    signature table consumed by both self-join sides and the
-    collect_set table consumed by both confirm joins), so the list
-    holds three entries — the caller releases them all."""
+    accumulate cached partitions per invocation).  Always held: the
+    banded signature table (consumed by both self-join sides) and the
+    collect_set table (consumed by both confirm joins).  The shingle
+    table is held only on xxhash64, whose signatures aggregate it; the
+    md5 signatures come from their own Arrow pass over the docs, so
+    the shingle table has one consumer and is never cached."""
     from crypto_crawler_rs_spark.operators.dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    held = []
-    out = minhash_lsh_pairs(
-        docs, k=3, n_hashes=8, n_bands=4, threshold=0.05, cleanup=held
-    )
-    out.count()
-    assert len(held) == 3 and all(h.is_cached for h in held)
-    for h in held:
-        h.unpersist(blocking=True)
-    assert not any(h.is_cached for h in held)
+    for family, n_held in (("xxhash64", 3), ("md5", 2)):
+        held = []
+        out = minhash_lsh_pairs(
+            docs, k=3, n_hashes=8, n_bands=4, threshold=0.05,
+            hash_family=family, cleanup=held,
+        )
+        out.count()
+        assert len(held) == n_held, family
+        assert all(h.is_cached for h in held), family
+        for h in held:
+            h.unpersist(blocking=True)
+        assert not any(h.is_cached for h in held), family
 
 
 def test_digest_compaction(spark, tmp_path):

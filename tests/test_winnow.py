@@ -1,6 +1,6 @@
 """Winnowing passage fingerprints (operators/winnow.py): the MOSS
-local-guarantee property, a brute-force python twin on real data, the
-zero-shuffle fingerprint plan, and the pair join."""
+local-guarantee property, a brute-force python twin on real data,
+and the pair join."""
 
 from __future__ import annotations
 
@@ -58,36 +58,6 @@ def test_local_guarantee_shared_passage_detected(spark):
     }
     assert (1, 2) in pairs
     assert not any(3 in p for p in pairs)
-
-
-def test_winnow_impls_equivalent(spark):
-    """arrow (production, Arrow-batched python) and hof (pure JVM)
-    must emit the identical fingerprint sets."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    a = {
-        r["doc_id"]: set(r["fingerprints"])
-        for r in winnow_fingerprints(docs, impl="arrow").collect()
-    }
-    h = {
-        r["doc_id"]: set(r["fingerprints"])
-        for r in winnow_fingerprints(docs, impl="hof").collect()
-    }
-    assert a == h
-
-
-def test_fingerprint_hof_plan_zero_shuffle(spark):
-    """The JVM impl stays inside the scan stage: no Exchange, no
-    python (the arrow impl trades one ArrowEvalPython for the
-    interpreted-HOF md5 re-evaluation — see module docstring)."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = (
-        winnow_fingerprints(docs, impl="hof")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-    assert "EvalPython" not in plan
 
 
 def test_short_docs(spark):

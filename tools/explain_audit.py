@@ -73,8 +73,10 @@ CHECKS = {
     ),
     "m1_msgtype_command_map": (
         [r"BroadcastHashJoin"],
-        [],
-        "msg-type mapping dim joins broadcast (events never shuffle)",
+        [r"RoundRobinPartitioning"],
+        "msg-type mapping dim joins broadcast (events never shuffle, "
+        "not even a scan spread: the per-row work is too cheap to pay "
+        "for the exchange)",
     ),
     "dedup_minhash_lsh": (
         [r"Join"],
@@ -203,10 +205,9 @@ CHECKS = {
         [r"HashAggregate"],
         [r"CartesianProduct", r"BatchEvalPython"],
         "winnowing: fingerprint selection over Arrow batches (the "
-        "measured stay-JVM exception, same as shingle_rows; a pure-"
-        "JVM hof twin is impl-equivalence-pinned); pair detection is "
-        "a df-capped inverted-index equi-join — banded, never "
-        "all-pairs",
+        "measured stay-JVM exception, same as shingle_rows; pinned "
+        "against a brute-force python twin); pair detection is a "
+        "df-capped inverted-index equi-join — banded, never all-pairs",
     ),
     # round 6 additions: the incremental fuzzy-dedup family
     "components_incremental": (
