@@ -677,6 +677,7 @@ def run_incremental_lsh(
 
     from pyspark.sql import functions as F
 
+    from crypto_crawler_rs_spark.functions.lifetimes import scope
     from crypto_crawler_rs_spark.operators.dedup import (
         incremental_lsh_pairs,
         minhash_lsh_pairs,
@@ -695,28 +696,24 @@ def run_incremental_lsh(
         inc_walls, full_walls = [], []
         n_inc = n_full_touching = 0
         for _ in range(2):
-            held = []
-            t0 = time.perf_counter()
-            n_inc = incremental_lsh_pairs(
-                new, [idx], threshold=0.5, cleanup=held, **kw
-            ).count()
-            inc_walls.append(time.perf_counter() - t0)
-            for h in held:
-                h.unpersist()
+            with scope():
+                t0 = time.perf_counter()
+                n_inc = incremental_lsh_pairs(
+                    new, [idx], threshold=0.5, **kw
+                ).count()
+                inc_walls.append(time.perf_counter() - t0)
         both = indexed.unionByName(new)
         for _ in range(2):
-            held = []
-            t0 = time.perf_counter()
-            full = minhash_lsh_pairs(
-                both, threshold=0.5, cleanup=held,
-                **{k: v for k, v in kw.items() if k != "n_buckets"},
-            )
-            n_full_touching = full.where(
-                (F.col("id_a") >= n_idx) | (F.col("id_b") >= n_idx)
-            ).count()
-            full_walls.append(time.perf_counter() - t0)
-            for h in held:
-                h.unpersist()
+            with scope():
+                t0 = time.perf_counter()
+                full = minhash_lsh_pairs(
+                    both, threshold=0.5,
+                    **{k: v for k, v in kw.items() if k != "n_buckets"},
+                )
+                n_full_touching = full.where(
+                    (F.col("id_a") >= n_idx) | (F.col("id_b") >= n_idx)
+                ).count()
+                full_walls.append(time.perf_counter() - t0)
         shutil.rmtree(tmp, ignore_errors=True)
         out["points"].append(
             {

@@ -228,27 +228,23 @@ def merge_shard_bitmaps(bloom: ShardedBloom, rows) -> None:
         np.bitwise_or(bloom._arr[r["shard"]], arr, out=bloom._arr[r["shard"]])
 
 
-def bloom_probe_udf(spark, bloom: ShardedBloom, cleanup: list | None = None):
+def bloom_probe_udf(spark, bloom: ShardedBloom):
     """Build an Arrow-batched probe UDF over a broadcast of the
     filter bits.  Returns a (host_hash, url_hash) -> bool pandas UDF.
 
     Scale note: broadcasting the WHOLE filter is right while
     n_shards × bits_per_shard is tens of MB; at 10^10-URL filters
     (~10-15 GB) use :func:`bloom_probe_sharded`, which loads only the
-    shards each task's partition actually touches.
-
-    ``cleanup``: optional list the bits broadcast is appended to; the
-    caller should ``.destroy()`` it once the probing jobs finish, or
-    a per-round broadcast accumulates on executors for the crawl's
-    lifetime."""
+    shards each task's partition actually touches."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BooleanType
 
-    bc = spark.sparkContext.broadcast(
-        (bloom._arr, bloom.n_shards, bloom.bits_per_shard, bloom.n_hashes, bloom.counting)
+    from .lifetimes import broadcast
+
+    bc = broadcast(
+        spark.sparkContext,
+        (bloom._arr, bloom.n_shards, bloom.bits_per_shard, bloom.n_hashes, bloom.counting),
     )
-    if cleanup is not None:
-        cleanup.append(bc)
 
     @pandas_udf(BooleanType())
     def probe(host_hash: pd.Series, url_hash: pd.Series) -> pd.Series:

@@ -41,7 +41,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..functions.ckpt import LocalCheckpointChain
+from ..functions.lifetimes import LocalCheckpointChain
 
 
 def _union_find_min(pair_rows) -> dict:
@@ -175,7 +175,7 @@ def connected_components(
     # n_changed not None, i.e. strictly after iteration 0 resolved it.
     max_deg: int | None = None
 
-    chain = LocalCheckpointChain(spark, keep=2)
+    chain = LocalCheckpointChain(keep=2)
     labels = chain.step(
         edges.select(F.col("a").alias("node"))
         .distinct()

@@ -34,6 +34,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..functions.lifetimes import checkpoint, persist, scope
+
 # Partition-local memo caps of the md5 Arrow builders: the memo is
 # cleared when it reaches the cap, bounding executor memory at any
 # vocabulary size.  Each builder reads its cap when it BUILDS the
@@ -113,7 +115,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.5,
     df_cap: int | None = None,
-    cleanup: list | None = None,
 ) -> DataFrame:
     """All doc pairs with Jaccard(shingle sets) >= threshold.
 
@@ -132,26 +133,16 @@ def ngram_jaccard_pairs(
     shared/size counts then use the CAPPED shingle sets on both sides
     of the Jaccard — mirror the cap in any oracle.  ``df_cap=None``
     runs the same plan without the cap's keep-filter join.
-
-    ``cleanup``: optional list the persisted shingle index is
-    appended to — unpersist after materializing the result, or a
-    long-lived session accumulates cached partitions per invocation
-    (same pattern as rank.global_rank / bloom_probe_udf).  Without a
-    list the caller owns the leak.
     """
-    from pyspark import StorageLevel
-
     # persist the exploded (id, shingle-hash) index: BOTH sides of the
     # self-join, the sizes aggregate (and the df-cap count) reuse it,
     # so the text scan + shingling runs once instead of 3-4x (it
     # dominates the query)
-    ex = (
-        shingle_rows(df, id_col, text_col, k)
-        .select("_id", F.xxhash64("_s").alias("_sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    ex = persist(
+        shingle_rows(df, id_col, text_col, k).select(
+            "_id", F.xxhash64("_s").alias("_sh")
+        )
     )
-    if cleanup is not None:
-        cleanup.append(ex)
     if df_cap is not None:
         keep = (
             ex.groupBy("_sh")
@@ -163,9 +154,7 @@ def ngram_jaccard_pairs(
         # both sides and the sizes aggregate once more, and without a
         # cache each consumer re-runs the df-cap count+join (the
         # captured plan held FOUR copies of the keep aggregate)
-        ex = ex.join(keep, "_sh").persist(StorageLevel.MEMORY_AND_DISK)
-        if cleanup is not None:
-            cleanup.append(ex)
+        ex = persist(ex.join(keep, "_sh"))
     # sizes counted over the indexed shingles so the Jaccard
     # denominator matches the (capped) sets.  r7: sizes are attached
     # to the AGGREGATED pair counts (one row per doc pair) instead of
@@ -283,7 +272,6 @@ def _band_signatures(
     n_hashes: int,
     n_bands: int,
     hash_family: str,
-    cleanup: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """``(ex, banded)``: the docs' shingle table (``shingle_rows``
     output) and their ``(_id, _band, _sig)`` banded MinHash
@@ -303,17 +291,13 @@ def _band_signatures(
       over ``ex`` (no python twin of Spark's xxhash64 here; its 8-byte
       keys also hash ~10x faster than md5, so the agg is not the
       bottleneck).  ``ex`` then feeds the signatures AND the caller,
-      so it is persisted and appended to ``cleanup``."""
-    from pyspark import StorageLevel
-
+      so it is persisted."""
     ex = shingle_rows(docs, id_col, text_col, k)
     if hash_family == "md5":
         sig = _minhash_sig_rows_arrow(docs, id_col, text_col, k, n_hashes)
         band_hash = F.md5
     elif hash_family == "xxhash64":
-        ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
-        if cleanup is not None:
-            cleanup.append(ex)
+        ex = persist(ex)
         sig = ex.groupBy("_id").agg(
             *[
                 F.min(F.xxhash64(F.concat(F.lit(f"mh{i}#"), F.col("_s")))).alias(f"h{i}")
@@ -353,7 +337,6 @@ def _confirm_pairs(
     cand: DataFrame,
     ex: DataFrame,
     threshold: float,
-    cleanup: list | None = None,
 ) -> DataFrame:
     """EXACT Jaccard confirmation of candidate pairs against the true
     shingle sets — the shared final stage of :func:`minhash_lsh_pairs`
@@ -373,17 +356,14 @@ def _confirm_pairs(
     same round).  Row width is bounded by the doc's shingle count —
     the same class as carrying ``text`` through a join, which every
     upstream stage already does."""
-    from pyspark import StorageLevel
-
     # persist (r7): both attach joins aggregate the SAME sets table,
     # and each side lands in its own broadcast — no shared exchange,
     # so without the cache the collect_set aggregation runs twice.
-    # Same cleanup contract as the callers' shingle index.
-    sets = ex.groupBy("_id").agg(
-        F.collect_set("_s").alias("_ss"), F.first("_n").alias("_n")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if cleanup is not None:
-        cleanup.append(sets)
+    sets = persist(
+        ex.groupBy("_id").agg(
+            F.collect_set("_s").alias("_ss"), F.first("_n").alias("_n")
+        )
+    )
     return (
         cand.join(
             sets.select(
@@ -421,7 +401,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     hash_family: str = "xxhash64",
     bucket_cap: int | None = None,
-    cleanup: list | None = None,
 ) -> DataFrame:
     """Near-dup pairs via banded LSH then EXACT Jaccard confirmation.
 
@@ -443,25 +422,19 @@ def minhash_lsh_pairs(
     the cap never fires.  Mirror the cap in any oracle (recall-only
     effect, like the band count itself).
     """
-    from pyspark import StorageLevel
-
     # shingle once; the table feeds the exact confirmation (and, on
     # the xxhash64 family, the signature build — _band_signatures
-    # persists it then, same cleanup contract as ngram_jaccard_pairs,
-    # ADVICE r3 #4)
+    # persists it then, ADVICE r3 #4)
     ex, banded = _band_signatures(
-        df, id_col, text_col, k, n_hashes, n_bands, hash_family, cleanup
+        df, id_col, text_col, k, n_hashes, n_bands, hash_family
     )
     # persist (r7): the self-join below consumes `banded` on BOTH
     # sides, and the planner broadcasts one of them — no exchange to
     # reuse, so without the cache the signature build (the arrow md5
     # pass / the 32-min aggregation) executes twice per query.  The
     # plan pin: exactly ONE MapInPandas sig pass under the candidate
-    # join (plans/r07/dedup_minhash_lsh_after.txt).  Same cleanup
-    # contract as the shingle table.
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    if cleanup is not None:
-        cleanup.append(banded)
+    # join (plans/r07/dedup_minhash_lsh_after.txt).
+    banded = persist(banded)
     if bucket_cap is not None:
         keep = (
             banded.groupBy("_band", "_sig")
@@ -478,7 +451,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
     # exact confirm: jaccard on true shingle sets of candidates only
-    return _confirm_pairs(cand, ex, threshold, cleanup=cleanup)
+    return _confirm_pairs(cand, ex, threshold)
 
 
 def _simhash_fp_rows_arrow(
@@ -641,9 +614,9 @@ def simhash_pairs(
     # query.  localCheckpoint materializes the (id, fp) pairs (two
     # 8-byte columns) and truncates the lineage — downstream plans see
     # a leaf.
-    fpx = fp.select(
-        F.col(id_col).alias("_id"), F.col(fp_col).alias("_fp")
-    ).localCheckpoint()
+    fpx = checkpoint(
+        fp.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("_fp"))
+    )
     bands = []
     for b in range(n_bands):
         lo = b * width
@@ -829,10 +802,6 @@ def write_band_index(
     Band signatures come from the SAME ``_band_signatures`` build as
     :func:`minhash_lsh_pairs`, so cross-batch collisions are
     bit-identical to a full-corpus run."""
-    cached: list = []
-    ex, banded = _band_signatures(
-        docs, id_col, text_col, k, n_hashes, n_bands, hash_family, cached
-    )
 
     def _write(df: DataFrame, part_col: str, sub: str) -> None:
         (
@@ -843,35 +812,39 @@ def write_band_index(
             .parquet(path.rstrip("/") + "/" + sub)
         )
 
-    if cached:
-        # the signatures were aggregated from the cached shingle
-        # table: write sequentially so the second job reads the cache
-        # the first one filled, then release it
-        _write(banded, "_sig", "bands")
-        _write(ex, "_id", "shingles")
-        for c in cached:
-            c.unpersist()
-        return
-    # the two writes share no lineage (bands come from the Arrow doc
-    # pass, shingles from ``ex``) — submit them from two driver
-    # threads so the second job back-fills the first's tail (guide
-    # §2.6); output files are identical either way.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    # pass the SESSION so job tags/local properties are inherited by
-    # the worker threads (the bare-callable form warns and drops tags
-    # on Spark 4)
-    wrap = inheritable_thread_target(docs.sparkSession)
-    jobs = (
-        lambda: _write(banded, "_sig", "bands"),
-        lambda: _write(ex, "_id", "shingles"),
-    )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(wrap(j)) for j in jobs]
-        for f in futs:
-            f.result()
+    # eager: the writes are this operator's actions, so it owns what
+    # the build persists
+    with scope() as cached:
+        ex, banded = _band_signatures(
+            docs, id_col, text_col, k, n_hashes, n_bands, hash_family
+        )
+        jobs = (
+            lambda: _write(banded, "_sig", "bands"),
+            lambda: _write(ex, "_id", "shingles"),
+        )
+        if cached:
+            # the signatures were aggregated from the cached shingle
+            # table: write sequentially so the second job reads the
+            # cache the first one filled
+            for j in jobs:
+                j()
+            return
+        # the two writes share no lineage (bands come from the Arrow
+        # doc pass, shingles from ``ex``) — submit them from two driver
+        # threads so the second job back-fills the first's tail (guide
+        # §2.6); output files are identical either way.  Pass the
+        # SESSION so job tags/local properties are inherited by the
+        # worker threads (the bare-callable form warns and drops tags
+        # on Spark 4)
+        wrap = inheritable_thread_target(docs.sparkSession)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [pool.submit(wrap(j)) for j in jobs]
+            for f in futs:
+                f.result()
 
 
 def compact_band_index(
@@ -913,7 +886,6 @@ def incremental_lsh_pairs(
     threshold: float = 0.5,
     hash_family: str = "xxhash64",
     n_buckets: int = 32,
-    cleanup: list | None = None,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """INCREMENTAL MinHash-LSH: confirmed near-dup pairs TOUCHING the
@@ -939,14 +911,12 @@ def incremental_lsh_pairs(
     (bounded by the collision count, not the corpus).  Nothing
     re-shuffles history.  ``new_docs`` must be disjoint from indexed
     docs — run :func:`filter_new_digests` first, same contract as the
-    digest index.  ``cleanup``: receives the persisted intermediates
-    (same contract as :func:`minhash_lsh_pairs`).
-    ``stats_out``: receives the probe/confirm scan plans
+    digest index.  ``stats_out``: receives the probe/confirm scan plans
     (``bands_plan``/``shingles_plan``) so tests and plan audits can
     assert the partition filters engaged."""
     spark = new_docs.sparkSession
     ex_new, banded_new = _band_signatures(
-        new_docs, id_col, text_col, k, n_hashes, n_bands, hash_family, cleanup
+        new_docs, id_col, text_col, k, n_hashes, n_bands, hash_family
     )
     banded_new = banded_new.withColumn(
         "bucket", F.pmod(F.hash("_sig"), F.lit(n_buckets))
@@ -958,9 +928,9 @@ def incremental_lsh_pairs(
     # as a collect_set Observation instead of a separate distinct+
     # collect job (r7 — the checkpoint already scans every row).
     bucket_obs = Observation()
-    banded_new = banded_new.observe(
-        bucket_obs, F.collect_set("bucket").alias("buckets")
-    ).localCheckpoint()
+    banded_new = checkpoint(
+        banded_new.observe(bucket_obs, F.collect_set("bucket").alias("buckets"))
+    )
     new_buckets = list(bucket_obs.get["buckets"])
     old_bands = reduce(
         lambda a, b: a.unionByName(b),
@@ -996,7 +966,7 @@ def incremental_lsh_pairs(
     # checkpoint as Observation metrics — two fewer driver-barrier
     # jobs than the old distinct-collect per table (r7).
     cand_obs = Observation()
-    cand = (
+    cand = checkpoint(
         cand_new_old.unionByName(cand_new_new)
         .distinct()
         .observe(
@@ -1008,7 +978,6 @@ def incremental_lsh_pairs(
                 F.pmod(F.hash("id_b"), F.lit(n_buckets))
             ).alias("bb"),
         )
-        .localCheckpoint()
     )
     cand_metrics = cand_obs.get
     cand_buckets = sorted(set(cand_metrics["ba"]) | set(cand_metrics["bb"]))
@@ -1048,7 +1017,7 @@ def incremental_lsh_pairs(
             F.broadcast(cand_ids), "_id", "left_semi"
         )
     )
-    return _confirm_pairs(cand, ex_all, threshold, cleanup=cleanup)
+    return _confirm_pairs(cand, ex_all, threshold)
 
 
 def chunk_dedup(

@@ -115,14 +115,14 @@ def pagerank(
     # lazy fill (r7): the first iteration's checkpoint job populates
     # the cache; an eager count() here was one extra E-row pass
 
-    from ..functions.ckpt import LocalCheckpointChain
+    from ..functions.lifetimes import LocalCheckpointChain
 
     base = (1.0 - damping) / n_nodes
     # keep=2: the newest iterate plus its predecessor (the tol check
     # reads both); older iterates' checkpoint blocks are released as
     # the loop advances (ADVICE r4: they used to accumulate for up to
     # n_iter generations)
-    chain = LocalCheckpointChain(spark, keep=2)
+    chain = LocalCheckpointChain(keep=2)
     ranks = chain.step(
         nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
     )

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.lifetimes import checkpoint, persist
 from .dedup import chunk_dedup
 
 
@@ -55,7 +56,6 @@ def prep_corpus(
     fuzzy_n_hashes: int = 32,
     fuzzy_n_bands: int = 16,
     fuzzy_hash_family: str = "xxhash64",
-    cleanup: list | None = None,
 ) -> DataFrame:
     """Returns one row per SURVIVING document:
     ``(doc_id, text_prepped, lang, n_tokens, n_chunks, n_kept)``
@@ -75,10 +75,7 @@ def prep_corpus(
     exactly "drop every doc whose component has a smaller member".
     ``fuzzy_hash_family='md5'`` makes the banding DuckDB-replayable
     (oracle parity); production keeps the xxhash64 default (8-byte
-    shuffle keys).  ``cleanup``: pass a list to receive the persisted
-    intermediates (the non-fuzzy path's unique-docs cache; the fuzzy
-    path's LSH shingle index) for caller-side unpersist (same
-    contract as minhash_lsh_pairs).
+    shuffle keys).
     """
     from ..functions.partitioning import spread_small_scan
 
@@ -114,12 +111,8 @@ def prep_corpus(
     # instances of the same gen).  One executor-local cache of
     # (id, text, stats) makes the pass run once — measured 1.9–2.2 s
     # → 0.9–1.0 s for the fuzzy path's checkpoint fill on the 10×
-    # corpus.  Released via `cleanup` or the orphan tracking below,
-    # same contract as unique_docs.
-    from pyspark import StorageLevel
-
-    stats = stats.persist(StorageLevel.MEMORY_AND_DISK)
-    new_caches = [stats]
+    # corpus.
+    stats = persist(stats)
     gated = stats.where(
         F.col("lang").isin(list(langs))
         & F.col("n_tokens").between(min_tokens, max_tokens)
@@ -152,35 +145,11 @@ def prep_corpus(
         # dedup join without it.  persist (not checkpoint) on this
         # path: the first executing stage fills the cache and lineage
         # stays intact, so the keeper branch keeps the pruned parquet
-        # scan the plan audit pins.  Registered in ``cleanup`` (same
-        # contract as the LSH shingle index) for long-lived sessions.
-        # The fuzzy branch below localCheckpoints instead (plan-SIZE
-        # blowup there, a cache lookup under the same giant analyzed
-        # tree would not help).
-        unique_docs = unique_docs.persist(StorageLevel.MEMORY_AND_DISK)
-        new_caches.append(unique_docs)
-    if cleanup is not None:
-        cleanup.extend(new_caches)
+        # scan the plan audit pins.  The fuzzy branch below
+        # checkpoints instead (plan-SIZE blowup there, a cache lookup
+        # under the same giant analyzed tree would not help).
+        unique_docs = persist(unique_docs)
     else:
-        # ADVICE r6: with no cleanup list a long-lived session
-        # accumulated one cached DataFrame per call — keep at most
-        # ONE call's orphaned caches alive by unpersisting the
-        # previous call's on the next call (callers who want
-        # deterministic release pass ``cleanup``).  Same-plan calls
-        # SHARE one cache entry (CacheManager matches by plan), so
-        # only semantically different previous plans are released —
-        # unpersisting an identical one would evict the entry this
-        # call is about to reuse (a repeated call would recompute
-        # the gate+dedup from scratch every time).
-        prev_caches = getattr(prep_corpus, "_orphan_caches", None) or []
-        for prev in prev_caches:
-            try:
-                if not any(prev.sameSemantics(n) for n in new_caches):
-                    prev.unpersist()
-            except Exception:
-                pass
-        prep_corpus._orphan_caches = new_caches
-    if fuzzy_threshold is not None:
         from .components import dedup_keep_list
         from .dedup import minhash_lsh_pairs
 
@@ -199,7 +168,7 @@ def prep_corpus(
         # executor-local storage — the same durability class as the
         # components/pagerank iteration checkpoints, and strictly
         # cheaper than re-running the gate per consumer.
-        unique_docs = unique_docs.localCheckpoint()
+        unique_docs = checkpoint(unique_docs)
         pairs = minhash_lsh_pairs(
             unique_docs,
             id_col=id_col,
@@ -209,7 +178,6 @@ def prep_corpus(
             n_bands=fuzzy_n_bands,
             threshold=fuzzy_threshold,
             hash_family=fuzzy_hash_family,
-            cleanup=cleanup,
         )
         # non-keepers only: docs untouched by any pair never appear in
         # the keep list and survive by the anti join's absence

@@ -17,10 +17,12 @@ e.g. ``url``) or ranks are nondeterministic across runs.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel, TaskContext
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+
+from ..functions.lifetimes import broadcast, persist
 
 
 def global_rank(
@@ -28,23 +30,16 @@ def global_rank(
     order_cols: list[str],
     out_col: str = "rank",
     num_partitions: int | None = None,
-    cleanup: list | None = None,
 ) -> DataFrame:
     """Attach a 1-based dense global row number ordered by
-    ``order_cols`` (must be a total order).
-
-    ``cleanup``: optional list the persisted intermediate and the
-    offsets broadcast are appended to; the CALLER must dispose them
-    (``.unpersist()``) after materializing the result — otherwise
-    long-running round loops accumulate cached partitions/broadcasts
-    on executors (they hold until GC)."""
+    ``order_cols`` (must be a total order)."""
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     cols = [F.col(c) for c in order_cols]
     part = df.repartitionByRange(num_partitions, *cols).sortWithinPartitions(*cols)
-    part = part.persist(StorageLevel.MEMORY_AND_DISK)
+    part = persist(part)
     counts = (
         part.withColumn("_pid", F.spark_partition_id())
         .groupBy("_pid")
@@ -60,10 +55,7 @@ def global_rank(
     for pid in sorted(by_pid):
         offsets[pid] = acc
         acc += by_pid[pid]
-    bc = spark.sparkContext.broadcast(offsets)
-    if cleanup is not None:
-        cleanup.append(part)
-        cleanup.append(bc)
+    bc = broadcast(spark.sparkContext, offsets)
 
     out_schema = StructType(part.schema.fields + [StructField(out_col, LongType(), False)])
 

@@ -210,6 +210,8 @@ def cosine_neardup_pairs(
     """
     import numpy as np
 
+    from ..functions.lifetimes import broadcast
+
     src = df.select(
         F.col(id_col).alias("_id"),
         F.transform(vec_col, lambda x: x.cast("double")).alias("_v"),
@@ -226,7 +228,7 @@ def cosine_neardup_pairs(
     # rounding to 6 decimals can lift a sim by < 5e-7, never more
     loose = threshold - 1e-6
     sc = df.sparkSession.sparkContext
-    bA = sc.broadcast((A_ids, np.ascontiguousarray(A.T), na))
+    bA = broadcast(sc, (A_ids, np.ascontiguousarray(A.T), na))
     n_parts = max(1, min(sc.defaultParallelism, (len(A) + 63) // 64))
 
     def pairs(batches):

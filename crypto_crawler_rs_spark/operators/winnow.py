@@ -108,7 +108,6 @@ def winnow_passage_pairs(
     min_shared: int = 2,
     df_cap: int = 100,
     key_family: str = "string",
-    cleanup: list | None = None,
 ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` selected fingerprints
     — candidates for passage-level duplication.  ``df_cap`` drops
@@ -121,13 +120,12 @@ def winnow_passage_pairs(
     xxhash64 of the md5 fingerprint — same selection, same pairs,
     8-byte join/groupBy keys for the production path.
 
-    ``cleanup``: receives the persisted exploded fingerprint index
-    (same contract as ``ngram_jaccard_pairs``) — it feeds THREE
+    The exploded fingerprint index is persisted: it feeds THREE
     consumers (the df-cap count and both self-join sides), and
     without the persist the arrow winnowing pass (one md5 per k-gram
     in python) re-ran per consumer (r7, guide §2.4; measured 3x the
     fingerprint cost at sf1.0)."""
-    from pyspark import StorageLevel
+    from ..functions.lifetimes import persist
 
     if key_family not in ("string", "xxhash64"):
         raise ValueError(f"key_family must be string|xxhash64, got {key_family!r}")
@@ -137,9 +135,7 @@ def winnow_passage_pairs(
     )
     if key_family == "xxhash64":
         fp = fp.withColumn("_fp", F.xxhash64("_fp"))
-    fp = fp.persist(StorageLevel.MEMORY_AND_DISK)
-    if cleanup is not None:
-        cleanup.append(fp)
+    fp = persist(fp)
     keep = (
         fp.groupBy("_fp")
         .agg(F.count("*").alias("_df"))

@@ -5,7 +5,8 @@
 2. trap_patterns drops scheme-less urls instead of collapsing them
    into host ''.
 3. connected_components / pagerank release old localCheckpoint blocks
-   (bounded retention via LocalCheckpointChain).
+   (bounded retention via LocalCheckpointChain), and release only
+   their own checkpoints.
 4. materialize_canonical_pages refuses non-identifier table names and
    out-of-warehouse rmtree paths.
 5. pagerank's empty-edge early return keeps the caller's node type.
@@ -64,6 +65,46 @@ def test_pagerank_checkpoint_blocks_bounded_and_correct(spark):
     rows = out.collect()
     assert abs(sum(r.rank for r in rows) - 1.0) < 1e-3  # mass conserved
     assert _persistent_rdd_count(spark) - base <= 2
+
+
+def test_chain_keeps_caches_it_does_not_own(spark):
+    """A lazily persisted input whose cache the chain's first step
+    happens to fill belongs to its caller, not to the chain: the
+    chain releases only its own checkpoint RDDs, so the cache's RDD
+    stays registered for as long as the DataFrame reports itself
+    cached."""
+    from pyspark import StorageLevel
+
+    from crypto_crawler_rs_spark.functions.lifetimes import (
+        LocalCheckpointChain,
+    )
+
+    base = (
+        spark.range(200)
+        .withColumn("k", F.col("id") % 7)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    try:
+        chain = LocalCheckpointChain(keep=2)
+        it = chain.step(base.groupBy("k").count())  # fills base's cache
+        cache_rdd = (
+            spark._jsparkSession.sharedState()
+            .cacheManager()
+            .lookupCachedData(base._jdf)
+            .get()
+            .cachedRepresentation()
+            .cacheBuilder()
+            .cachedColumnBuffers()
+            .id()
+        )
+        for _ in range(3):
+            it = chain.step(it.select("k", (F.col("count") + 1).alias("count")))
+        chain.close()
+        assert base.is_cached
+        live = spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+        assert cache_rdd in {int(i) for i in live}
+    finally:
+        base.unpersist()
 
 
 def test_pagerank_empty_edges_keeps_node_type(spark):

@@ -220,6 +220,7 @@ def test_write_band_index_threaded_arrow_matches_jvm_agg_build(spark, tmp_path):
     _band_signatures build exactly."""
     import os
 
+    from crypto_crawler_rs_spark.functions.lifetimes import scope
     from crypto_crawler_rs_spark.operators.dedup import (
         _band_signatures,
         write_band_index,
@@ -240,21 +241,20 @@ def test_write_band_index_threaded_arrow_matches_jvm_agg_build(spark, tmp_path):
             (int(r._id), int(r._band), str(r._sig))
             for r in spark.read.parquet(f"{idx}/bands").collect()
         )
-        cached = []
-        ex, banded = _band_signatures(docs, "doc_id", "text", 3, 16, 8, fam, cached)
-        # the shingle table is cached exactly when the signatures read it
-        assert len(cached) == (fam == "xxhash64"), fam
-        want_bands = sorted(
-            (int(r._id), int(r._band), str(r._sig)) for r in banded.collect()
-        )
-        assert got_bands == want_bands, fam
-        got_sh = sorted(
-            (int(r._id), int(r._n), str(r._s))
-            for r in spark.read.parquet(f"{idx}/shingles").collect()
-        )
-        want_sh = sorted(
-            (int(r._id), int(r._n), str(r._s)) for r in ex.collect()
-        )
-        assert got_sh == want_sh, fam
-        for c in cached:
-            c.unpersist()
+        with scope() as cached:
+            ex, banded = _band_signatures(docs, "doc_id", "text", 3, 16, 8, fam)
+            # the shingle table is cached exactly when the signatures
+            # read it
+            assert len(cached) == (fam == "xxhash64"), fam
+            want_bands = sorted(
+                (int(r._id), int(r._band), str(r._sig)) for r in banded.collect()
+            )
+            assert got_bands == want_bands, fam
+            got_sh = sorted(
+                (int(r._id), int(r._n), str(r._s))
+                for r in spark.read.parquet(f"{idx}/shingles").collect()
+            )
+            want_sh = sorted(
+                (int(r._id), int(r._n), str(r._s)) for r in ex.collect()
+            )
+            assert got_sh == want_sh, fam

@@ -143,29 +143,27 @@ def test_shingle_impls_equivalent(spark):
 
 
 def test_minhash_cleanup_contract(spark):
-    """minhash_lsh_pairs(cleanup=...) hands back its persisted
-    intermediates so callers can unpersist — same contract
-    ngram_jaccard_pairs got in r3 (long-lived sessions otherwise
-    accumulate cached partitions per invocation).  Always held: the
-    banded signature table (consumed by both self-join sides) and the
-    collect_set table (consumed by both confirm joins).  The shingle
-    table is held only on xxhash64, whose signatures aggregate it; the
-    md5 signatures come from their own Arrow pass over the docs, so
-    the shingle table has one consumer and is never cached."""
+    """minhash_lsh_pairs registers its persisted intermediates with the
+    open lifetimes scope, which releases them at exit.  Always held:
+    the banded signature table (consumed by both self-join sides) and
+    the collect_set table (consumed by both confirm joins).  The
+    shingle table is held only on xxhash64, whose signatures aggregate
+    it; the md5 signatures come from their own Arrow pass over the
+    docs, so the shingle table has one consumer and is never cached."""
+    from crypto_crawler_rs_spark.functions.lifetimes import scope
     from crypto_crawler_rs_spark.operators.dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for family, n_held in (("xxhash64", 3), ("md5", 2)):
-        held = []
-        out = minhash_lsh_pairs(
-            docs, k=3, n_hashes=8, n_bands=4, threshold=0.05,
-            hash_family=family, cleanup=held,
-        )
-        out.count()
-        assert len(held) == n_held, family
-        assert all(h.is_cached for h in held), family
-        for h in held:
-            h.unpersist(blocking=True)
+    for family, n_held, n_shingle in (("xxhash64", 3, 1), ("md5", 2, 0)):
+        with scope() as held:
+            out = minhash_lsh_pairs(
+                docs, k=3, n_hashes=8, n_bands=4, threshold=0.05,
+                hash_family=family,
+            )
+            out.count()
+            assert len(held) == n_held, family
+            assert all(h.is_cached for h in held), family
+            assert sum("_s" in h.columns for h in held) == n_shingle, family
         assert not any(h.is_cached for h in held), family
 
 

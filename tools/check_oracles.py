@@ -16,6 +16,7 @@ import pandas as pd
 sys.path.insert(0, ".")
 
 import __spark_entry__ as entrymod  # noqa: E402
+from crypto_crawler_rs_spark.functions.lifetimes import scope  # noqa: E402
 from crypto_crawler_rs_spark.session import get_spark  # noqa: E402
 
 TABLES = (
@@ -56,7 +57,10 @@ def main():
         if only and name not in only:
             continue
         try:
-            got = fn(spark, sf).toPandas()
+            # one scope per query: what the build persists, checkpoints
+            # or broadcasts is released once its rows are collected
+            with scope():
+                got = fn(spark, sf).toPandas()
         except Exception as ex:
             failures.append((name, f"SPARK ERROR {type(ex).__name__}: {str(ex)[:300]}"))
             print(f"FAIL  {name}: spark error {str(ex)[:200]}")

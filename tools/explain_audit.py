@@ -16,6 +16,7 @@ from contextlib import redirect_stdout
 sys.path.insert(0, ".")
 
 import __spark_entry__ as entrymod  # noqa: E402
+from crypto_crawler_rs_spark.functions.lifetimes import scope  # noqa: E402
 from crypto_crawler_rs_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
@@ -252,7 +253,10 @@ def main():
     sections = []
     failures = []
     for name, (must, must_not, note) in CHECKS.items():
-        plan = plan_of(qs[name](spark, SF))
+        # one scope per query: a cache an earlier query's build left
+        # behind would otherwise be substituted into this query's plan
+        with scope():
+            plan = plan_of(qs[name](spark, SF))
         status = "PASS"
         detail = []
         for pat in must:
