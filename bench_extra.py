@@ -10,6 +10,13 @@ Usage:
 Timing methodology matches bench.py run_queries (count(), min of N,
 clearCache between queries) unless --noop is given, which times a
 noop-sink write (computes every column; guide §1.4).
+
+  python bench_extra.py --python-tax [--cpus 4]
+
+times a no-op ``mapInPandas`` over 4, 32 and 128 partitions against a
+JVM ``count()`` over the same ranges (min of 3 each) and prints the
+wall ms per Python task: the fixed cost every Python hop pays before
+user code runs.
 """
 
 from __future__ import annotations
@@ -32,7 +39,10 @@ def main():
     ap.add_argument("--explain-dir", default="")
     ap.add_argument("--explain-suffix", default="_before")
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--python-tax", action="store_true")
     args = ap.parse_args()
+    if args.python_tax:
+        return python_tax(args.cpus)
 
     import __spark_entry__ as entrymod
     from crypto_crawler_rs_spark.session import get_spark
@@ -67,6 +77,36 @@ def main():
         out[name] = round(best, 3)
         print(f"{name}: {out[name]}s", file=sys.stderr, flush=True)
     print(json.dumps({"sf": args.sf, "noop": args.noop, "queries": out}))
+    spark.stop()
+
+
+def python_tax(cpus: int, runs: int = 3) -> None:
+    from crypto_crawler_rs_spark.session import get_spark
+
+    spark = get_spark(app="bench_extra_python_tax", master=f"local[{cpus}]", shuffle_partitions=cpus)
+
+    def best(action) -> float:
+        times = []
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            action()
+            times.append(time.perf_counter() - t0)
+        return min(times)
+
+    out = {}
+    for parts in (4, 32, 128):
+        df = spark.range(0, parts, numPartitions=parts)
+        noop = df.mapInPandas(lambda it: it, df.schema)
+        noop.count()  # start and warm the workers
+        py_s, jvm_s = best(noop.count), best(df.count)
+        out[parts] = {
+            "python_s": round(py_s, 3),
+            "jvm_s": round(jvm_s, 3),
+            "ms_per_python_task": round(1000 * py_s / parts, 1),
+            "ms_per_jvm_task": round(1000 * jvm_s / parts, 1),
+        }
+        print(f"{parts} partitions: {out[parts]}", file=sys.stderr, flush=True)
+    print(json.dumps({"cpus": cpus, "min_of": runs, "python_tax": out}))
     spark.stop()
 
 

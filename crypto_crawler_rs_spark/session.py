@@ -53,6 +53,12 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
+    # the engine's daemon saves each Python task the re-read of every
+    # zip on the workers' sys.path (see worker_daemon.py); it must be
+    # importable when the daemon starts, which the PYTHONPATH set above
+    # guarantees only where the workers are local
+    if master.startswith("local"):
+        b = b.config("spark.python.daemon.module", "crypto_crawler_rs_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

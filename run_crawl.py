@@ -10,6 +10,20 @@ Cluster usage (north_star contract):
         --state  s3://bucket/crawl_state/  \\
         --max-rounds 64
 
+Python workers: this script builds its session with
+SparkSession.builder, so it does not get the engine's worker daemon
+that session.get_spark selects for local masters.  Up to CPython 3.12
+that daemon saves each Python task a re-read of every zip on the
+workers' sys.path (pyspark.zip, py4j, --py-files archives); pass
+
+        --conf spark.python.daemon.module=crypto_crawler_rs_spark.worker_daemon
+
+to use it.  Precondition: the package must be importable by the
+executors' Python when the daemon starts, e.g. installed there or on
+the executors' PYTHONPATH.  A --py-files archive that is only added to
+each task's sys.path arrives after the daemon has started and does not
+count; without the package no Python worker starts.
+
 Local smoke (generates a synthetic corpus when --pages is omitted):
 
     python run_crawl.py --state /tmp/crawl_state --max-rounds 4
