@@ -17,6 +17,14 @@ times a no-op ``mapInPandas`` over 4, 32 and 128 partitions against a
 JVM ``count()`` over the same ranges (min of 3 each) and prints the
 wall ms per Python task: the fixed cost every Python hop pays before
 user code runs.
+
+  python bench_extra.py --compaction-tiers [--cpus 4]
+
+drives ``FrontierScheduler.compact_seen`` over 16 synthetic rounds: a
+2M-row bucketed base, then one flat 3k-row delta per round, compacted
+once the seen set lists ``compact_seen_every`` (2) roots.  It prints
+the rows rewritten per row inserted, the most roots the seen set
+listed, and the seconds spent in compaction.
 """
 
 from __future__ import annotations
@@ -40,9 +48,12 @@ def main():
     ap.add_argument("--explain-suffix", default="_before")
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--python-tax", action="store_true")
+    ap.add_argument("--compaction-tiers", action="store_true")
     args = ap.parse_args()
     if args.python_tax:
         return python_tax(args.cpus)
+    if args.compaction_tiers:
+        return compaction_tiers(args.cpus)
 
     import __spark_entry__ as entrymod
     from crypto_crawler_rs_spark.session import get_spark
@@ -108,6 +119,74 @@ def python_tax(cpus: int, runs: int = 3) -> None:
         print(f"{parts} partitions: {out[parts]}", file=sys.stderr, flush=True)
     print(json.dumps({"cpus": cpus, "min_of": runs, "python_tax": out}))
     spark.stop()
+
+
+def compaction_tiers(
+    cpus: int, rounds: int = 16, base_rows: int = 2_000_000, delta_rows: int = 3_000
+) -> None:
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from crypto_crawler_rs_spark.plans.frontier import (
+        FrontierConfig,
+        FrontierScheduler,
+        parquet_row_count,
+    )
+    from crypto_crawler_rs_spark.session import get_spark
+
+    spark = get_spark(app="bench_extra_compaction_tiers", master=f"local[{cpus}]", shuffle_partitions=cpus)
+    work = tempfile.mkdtemp(prefix="compaction_tiers_")
+    cfg = FrontierConfig(seen_anti_join="bucket_pruned", pages_canonical=True, compact_seen_every=2)
+    eng = FrontierScheduler(
+        spark,
+        spark.createDataFrame([], "url string, html binary"),
+        spark.createDataFrame([], "host string"),
+        os.path.join(work, "state"),
+        cfg,
+    )
+
+    def seen_rows(first: int, n: int, rnd: int, host: str):
+        url = F.concat(F.lit(f"https://{host}"), F.col("id") % 64, F.lit(".example.net/p/"), F.col("id"))
+        return eng._seen_delta(
+            spark.range(first, first + n).select(
+                url.alias("url"), F.concat(F.lit(host), F.col("id") % 64, F.lit(".example.net")).alias("host")
+            ),
+            rnd,
+        )
+
+    base = os.path.join(work, "base")
+    seen_rows(0, base_rows, 0, "base").repartition(cfg.n_seen_buckets, "bucket").write.partitionBy(
+        "bucket"
+    ).parquet(base)
+    seen, inserted, rewritten, max_roots, compact_s = [base], 0, 0, 1, 0.0
+    for rnd in range(1, rounds + 1):
+        # a flat LSM delta, as the round loop writes for a small frontier
+        delta = seen_rows(base_rows + inserted, delta_rows, rnd, "crawl").drop("bucket")
+        seen.append(eng.store.write(delta, rnd, "seen_delta"))
+        inserted += delta_rows
+        max_roots = max(max_roots, len(seen))
+        if len(seen) >= cfg.compact_seen_every:
+            before = set(seen)
+            t0 = time.perf_counter()
+            seen, _ = eng.compact_seen(seen, [], rnd + 1)
+            compact_s += time.perf_counter() - t0
+            rewritten += sum(parquet_row_count(p) for p in seen if p not in before)
+        print(f"round {rnd}: roots {[parquet_row_count(p) for p in seen]}", file=sys.stderr, flush=True)
+    assert parquet_row_count(seen) == base_rows + inserted
+    print(json.dumps({
+        "cpus": cpus,
+        "rounds": rounds,
+        "base_rows": base_rows,
+        "delta_rows": delta_rows,
+        "rows_rewritten_per_row_inserted": round(rewritten / inserted, 2),
+        "max_roots": max_roots,
+        "final_roots": len(seen),
+        "compact_s": round(compact_s, 2),
+    }))
+    spark.stop()
+    shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -83,8 +83,11 @@ def _bucket_carriers(n_buckets: int) -> tuple:
 # reads can be cached in the long-lived python worker across rounds:
 # round N+1 re-reads only its NEW delta, not the whole seen set —
 # that re-read is the recurring I/O term of the 10^10 crawl.  The
-# cache is bounded (LRU by rows) and keyed by path, so compaction
-# (which writes NEW roots) naturally ages old entries out.  Negative
+# cache is bounded (LRU by rows) and keyed by path.  Size-tiered
+# compaction (FrontierScheduler.compact_seen) keeps the large older
+# roots under their paths, so their entries stay warm across
+# compactions; only the small merged roots get new paths, and their
+# old entries age out.  Negative
 # entries (missing bucket dir) are safe for the same immutability
 # reason.  Requires spark.python.worker.reuse (the default).
 _PATH_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
@@ -109,12 +112,22 @@ _PATH_CACHE_MAX_ROWS = int(
 # memory-maps it ZERO-COPY and streams it through ``is_in`` straight
 # from the page cache.  This is the local-mode twin of a warm
 # cluster's executor-owned bucket cache.  Size-capped, mtime-LRU;
-# compaction writes new roots so stale entries age out.  Set the dir
+# the roots compaction merges get new paths, so their stale entries
+# age out while the large kept roots stay cached.  Set the dir
 # env to a fast local disk in deployments; empty budget disables.
 _IPC_DIR = _os.environ.get("SPARK_GRAFT_SEENJOIN_IPC_DIR", "")
 _IPC_MAX_BYTES = int(
     _os.environ.get("SPARK_GRAFT_SEENJOIN_IPC_BYTES", 8 << 30)
 )
+
+
+def has_bucket_dirs(path: str) -> bool:
+    """True iff ``path`` is a local root in the bucketed seen layout
+    (hive ``bucket=K/`` dirs).  False for flat roots and for paths
+    that are not local directories (e.g. catalog table idents)."""
+    return _os.path.isdir(path) and any(
+        e.startswith("bucket=") for e in _os.listdir(path)
+    )
 
 
 def _ipc_cache_path(path: str, bucket: int, columns: tuple) -> str | None:
@@ -327,10 +340,7 @@ def filter_unseen_bucket_pruned(
             matched subset immediately."""
             whole = []
             for p in paths:
-                has_bucket_dirs = os.path.isdir(p) and any(
-                    e.startswith("bucket=") for e in os.listdir(p)
-                )
-                if os.path.isdir(p) and not has_bucket_dirs:
+                if os.path.isdir(p) and not has_bucket_dirs(p):
                     t = pq.read_table(p, columns=columns)
                     if t.num_rows:
                         whole.append(t)

@@ -8,13 +8,36 @@ import shutil
 
 
 def test_crash_before_commit_replays_idempotently(spark, tmp_path):
-    from crypto_crawler_rs_spark.plans.frontier import FrontierConfig, FrontierScheduler
+    from crypto_crawler_rs_spark.plans.frontier import FrontierConfig
+
+    _crash_before_commit_replays(spark, tmp_path, FrontierConfig(max_rounds=4))
+
+
+def test_crash_after_tiered_compaction_replays_idempotently(spark, tmp_path):
+    """The crashed round ends in a size-tiered compaction that keeps an
+    older root: the replay writes its snapshot again over the orphan
+    and the kept root is shared by the old and the new manifest."""
+    from crypto_crawler_rs_spark.plans.frontier import FrontierConfig
+
+    m2, m3 = _crash_before_commit_replays(
+        spark, tmp_path,
+        FrontierConfig(
+            max_rounds=4, compact_seen_every=2, seen_anti_join="bucket_pruned"
+        ),
+    )
+    assert "seen_compact" in m3["seen"][-1]
+    assert len(m3["seen"]) >= 2 and m3["seen"][0] in m2["seen"]
+
+
+def _crash_before_commit_replays(spark, tmp_path, cfg):
+    """Crash round 3 just before its commit, resume, and match the
+    uninterrupted oracle; returns the manifests of rounds 2 and 3."""
+    from crypto_crawler_rs_spark.plans.frontier import FrontierScheduler
     from crypto_crawler_rs_spark.plans.oracle import OracleCrawler
     from crypto_crawler_rs_spark.sources.fixtures import corpus_to_spark, gen_corpus
 
     corpus = gen_corpus(n_pages=120, n_hosts=6, n_seeds=10, seed=17)
     sdfs = corpus_to_spark(spark, corpus)
-    cfg = FrontierConfig(max_rounds=4)
     state = str(tmp_path / "s")
     eng = FrontierScheduler(spark, sdfs["pages"], sdfs["host_policy"], state, cfg)
 
@@ -25,7 +48,7 @@ def test_crash_before_commit_replays_idempotently(spark, tmp_path):
     # run round 3 fully (data dirs written + manifest committed), then
     # simulate a crash-just-before-commit by restoring the OLD manifest:
     # round-3 directories become unreferenced orphans
-    eng.run(max_rounds=3)
+    m3 = eng.run(max_rounds=3)
     with open(f"{state}/manifest.json", "w") as f:
         f.write(manifest_bytes)
 
@@ -52,6 +75,7 @@ def test_crash_before_commit_replays_idempotently(spark, tmp_path):
     assert gs["url"].tolist() == es["url"].tolist()  # no dupes, no gaps
     seen = {r["url"] for r in eng2.seen(m_final).select("url").collect()}
     assert seen == oracle.seen
+    return m2, m3
 
 
 def test_manifest_commit_is_atomic(spark, tmp_path):

@@ -35,6 +35,10 @@ def test_gc_after_compaction_then_resume_matches_oracle(spark, tmp_path):
     eng = FrontierScheduler(spark, sdfs["pages"], sdfs["host_policy"], state, cfg)
     m = eng.run(seeds=sdfs["seeds"], max_rounds=4)
     assert any("seen_compact" in p for p in m["seen"])  # compaction ran
+    # the last compaction was size-tiered: it kept an older root,
+    # written rounds before the snapshot it added
+    older, newest = m["seen"][0], m["seen"][-1]
+    assert len(m["seen"]) >= 2 and older < newest and "seen_compact" in newest
 
     before = set(eng.store.data_dirs())
     deleted = eng.store.gc()
@@ -43,6 +47,7 @@ def test_gc_after_compaction_then_resume_matches_oracle(spark, tmp_path):
         assert os.path.exists(p), f"gc deleted a referenced path: {p}"
     for p in deleted:
         assert p in before and not os.path.exists(p)
+    assert older in before and older not in deleted
 
     # resume after gc: identical to the uninterrupted oracle
     eng2 = FrontierScheduler(spark, sdfs["pages"], sdfs["host_policy"], state, cfg)
