@@ -593,6 +593,13 @@ class FrontierScheduler:
             .groupBy("url", "host")
             .agg(F.min("depth").cast("int").alias("depth"))
         )
+        # counted on the write, as _run_round counts next_frontier: with
+        # the size known, round 0 takes the same size-gated branches as
+        # every later round instead of the absent-size "assume big" ones
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        frontier = frontier.observe(obs, F.count(F.lit(1)).alias("n"))
         fpath = self.store.write(frontier, 0, "frontier")
         hpath = self.store.write(self._empty_host_state(), 0, "host_state")
         if self.cfg.bloom_expected_urls is not None:
@@ -622,6 +629,7 @@ class FrontierScheduler:
             "fetched": [],
             "metrics": [],
             "quarantine": qpath,
+            "frontier_size": int(obs.get["n"]),
             # layout constant: the seen/tombstone delta dirs and the
             # bloom shards are keyed by pmod(host_hash, n) — resuming
             # with a different n would read the wrong bucket dirs and
@@ -1473,7 +1481,7 @@ class FrontierScheduler:
         while manifest["round"] < max_rounds:
             if manifest.get("frontier_size") == 0:
                 break
-            if manifest["round"] > 0 and "frontier_size" not in manifest:
+            if "frontier_size" not in manifest:
                 if self.store.read(manifest["frontier"]).isEmpty():
                     break
             manifest = self.run_round(manifest)

@@ -12,6 +12,18 @@ from __future__ import annotations
 import os
 import sys
 
+# Spark keeps the classes janino compiles for generated code (whole
+# stages, projections, predicates) in one JVM-wide cache of
+# spark.sql.codegen.cache.maxEntries entries, 100 by default.  One
+# crawl round needs ~150 of them, so at 100 each round evicts the
+# classes the next round needs and compiles them all again.  On top
+# of that working set each round adds ~18 classes of its own: Spark
+# inlines the round-number literals into the generated source.  2000
+# holds the working set and ~100 rounds of those before the LRU
+# reaches them.  The conf is static: only a session factory can set
+# it, and the JVM reads it once, at its first compile.
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def get_spark(
     app: str = "crypto_crawler_rs_spark",
@@ -52,6 +64,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     # the engine's daemon saves each Python task the re-read of every
     # zip on the workers' sys.path (see worker_daemon.py); it must be

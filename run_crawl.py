@@ -24,6 +24,16 @@ the executors' PYTHONPATH.  A --py-files archive that is only added to
 each task's sys.path arrives after the daemon has started and does not
 count; without the package no Python worker starts.
 
+Compiled-code cache: for the same reason the session keeps Spark's
+default of 100 cached janino classes, while one crawl round compiles
+about 150, so every round compiles its whole plan again.  Pass
+
+        --conf spark.sql.codegen.cache.maxEntries=2000
+
+(session.CODEGEN_CACHE_ENTRIES).  The conf is static: it must be set
+at submit time, and it sizes the cache of every JVM, each executor's
+included, since each executor keeps a cache of its own.
+
 Local smoke (generates a synthetic corpus when --pages is omitted):
 
     python run_crawl.py --state /tmp/crawl_state --max-rounds 4
