@@ -26,16 +26,17 @@ once the seen set lists ``compact_seen_every`` (2) roots.  It prints
 the rows rewritten per row inserted, the most roots the seen set
 listed, and the seconds spent in compaction.
 
-  python bench_extra.py --codegen-rounds [--cpus 4] [--rounds 6]
+  python bench_extra.py --codegen-rounds [--cpus 4]
 
-drives the ``crawl_long_seen`` shape (8k pages, 2M seeded seen rows
-on disjoint hosts, ``compact_seen_every=2``) round by round from
+drives the ``crawl_long_seen`` shape (perfbench's corpus, budget and
+2M seeded seen rows, ``compact_seen_every=2``) for 4 rounds from
 ``init_state`` and prints, per round, the janino compiles (the count
 delta of Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME``), the JVM's
 JIT compile time (elapsed, summed over its compiler threads, so it can
-exceed the CPU time on a busy machine), and the CPU seconds of this
-process tree and the wall seconds.  Every counter is read through py4j or /proc: no Spark
-job is added.
+exceed the CPU time on a busy machine), the CPU seconds of this process
+tree, the wall seconds, and the driver JVM's metaspace in use and
+loaded class count after the round; at the end, the JVM's peak RSS.
+Every counter is read through py4j or /proc: no Spark job is added.
 """
 
 from __future__ import annotations
@@ -61,14 +62,13 @@ def main():
     ap.add_argument("--python-tax", action="store_true")
     ap.add_argument("--compaction-tiers", action="store_true")
     ap.add_argument("--codegen-rounds", action="store_true")
-    ap.add_argument("--rounds", type=int, default=6)
     args = ap.parse_args()
     if args.python_tax:
         return python_tax(args.cpus)
     if args.compaction_tiers:
         return compaction_tiers(args.cpus)
     if args.codegen_rounds:
-        return codegen_rounds(args.cpus, args.rounds)
+        return codegen_rounds(args.cpus)
 
     import __spark_entry__ as entrymod
     from crypto_crawler_rs_spark.session import get_spark
@@ -204,55 +204,55 @@ def compaction_tiers(
     shutil.rmtree(work, ignore_errors=True)
 
 
-def codegen_rounds(
-    cpus: int, rounds: int, n_pages: int = 8_000, seeded_rows: int = 2_000_000, seed: int = 7
-) -> None:
+def codegen_rounds(cpus: int, rounds: int = 4, seed: int = 7) -> None:
     import shutil
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from crypto_crawler_rs_spark.plans.frontier import FrontierConfig, FrontierScheduler
     from crypto_crawler_rs_spark.session import get_spark
     from crypto_crawler_rs_spark.sources.fixtures import corpus_to_spark, gen_corpus
 
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+    from crawl import (
+        BUDGET,
+        COMPACT_SEEN_EVERY,
+        N_HOSTS,
+        N_PAGES,
+        SEEDED_SEEN,
+        _write_seeded_seen,
+    )
     from measure import tree_cpu_s
 
     spark = get_spark(app="bench_extra_codegen_rounds", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     jvm = spark.sparkContext._jvm
     janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    mgmt = jvm.java.lang.management.ManagementFactory
+    jit = mgmt.getCompilationMXBean()
+    classes = mgmt.getClassLoadingMXBean()
+    metaspace = next(p for p in mgmt.getMemoryPoolMXBeans() if p.getName() == "Metaspace")
+    jvm_pid = spark.sparkContext._gateway.proc.pid
 
     def counters() -> tuple[int, float, float, float]:
         return janino.getCount(), jit.getTotalCompilationTime() / 1000, tree_cpu_s(), time.perf_counter()
 
+    def jvm_peak_rss_mb() -> float:
+        with open(f"/proc/{jvm_pid}/status") as f:
+            return next(int(line.split()[1]) for line in f if line.startswith("VmHWM:")) / 1024
+
     work = tempfile.mkdtemp(prefix="codegen_rounds_")
     try:
-        corpus = gen_corpus(n_pages=n_pages, n_hosts=64, n_seeds=n_pages // 5, links_per_page=6, seed=seed)
-        # one budget for every host, so a round schedules enough urls to
-        # load the cores (the crawl_long_seen shape)
-        corpus["host_policy"]["budget_per_round"] = 30
+        corpus = gen_corpus(n_pages=N_PAGES, n_hosts=N_HOSTS, n_seeds=N_PAGES // 5, links_per_page=6, seed=seed)
+        corpus["host_policy"]["budget_per_round"] = BUDGET
         sdfs = corpus_to_spark(spark, corpus)
-        cfg = FrontierConfig(compact_seen_every=2)
+        cfg = FrontierConfig(compact_seen_every=COMPACT_SEEN_EVERY)
         eng = FrontierScheduler(spark, sdfs["pages"], sdfs["host_policy"], os.path.join(work, "state"), cfg)
         eng.pages.count()
 
-        # seen rows on hosts the corpus never links to, bucketed like the
-        # engine's seen snapshots: the rounds anti-join against a long
-        # crawl's seen set without changing what gets scheduled
         seeded = os.path.join(work, "seen_seeded")
-        url = F.concat(F.lit("https://seed"), F.pmod(F.xxhash64("id"), F.lit(5000)), F.lit(".example.net/p/"), F.col("id"))
-        eng._seen_delta(
-            spark.range(seeded_rows).select(
-                url.alias("url"), F.regexp_extract(url, r"^https://([^/]+)", 1).alias("host")
-            ),
-            0,
-        ).repartition(cfg.n_seen_buckets, "bucket").write.partitionBy("bucket").parquet(seeded)
-
+        _write_seeded_seen(spark, seeded, SEEDED_SEEN, cfg.n_seen_buckets)
         manifest = eng.init_state(sdfs["seeds"])
-        manifest = dict(manifest, seen=manifest["seen"] + [seeded], seen_rows=manifest["seen_rows"] + seeded_rows)
+        manifest = dict(manifest, seen=manifest["seen"] + [seeded], seen_rows=manifest["seen_rows"] + SEEDED_SEEN)
         eng.store.commit(manifest)
         before = counters()
         out = []
@@ -267,11 +267,19 @@ def codegen_rounds(
                 "jit_s": round(after[1] - before[1], 2),
                 "cpu_s": round(after[2] - before[2], 2),
                 "wall_s": round(after[3] - before[3], 2),
+                "metaspace_mb": round(metaspace.getUsage().getUsed() / 2**20, 1),
+                "loaded_classes": classes.getLoadedClassCount(),
             }
             before = after
             out.append(row)
             print(row, file=sys.stderr, flush=True)
-        print(json.dumps({"cpus": cpus, "n_pages": n_pages, "seeded_rows": seeded_rows, "rounds": out}))
+        print(json.dumps({
+            "cpus": cpus,
+            "n_pages": N_PAGES,
+            "seeded_rows": SEEDED_SEEN,
+            "rounds": out,
+            "jvm_peak_rss_mb": round(jvm_peak_rss_mb()),
+        }))
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
