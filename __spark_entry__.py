@@ -632,7 +632,7 @@ def q_frontier_round0(spark, sf):
     scale: the single-partition rank window here only ever sees the
     POPPED set (<= sum of per-host budgets — the per-round command
     quota, small by construction); the engine swaps in the two-pass
-    range-partitioned rank above small_rank_threshold.
+    range-partitioned rank at or above ``SMALL_RANK_THRESHOLD``.
     """
     from crypto_crawler_rs_spark.functions.urls import canonicalize_udf, host_col
     from crypto_crawler_rs_spark.operators.pop import pop_per_host

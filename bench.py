@@ -96,8 +96,8 @@ def run_frontier(
     discovered links) per second over a multi-round crawl.
 
     ``scale_config``: run with the 10^10-URL knob set — bucket_pruned
-    exact seen check (no seen-side shuffle), sharded mmap bloom probe
-    (no whole-filter broadcast), cardinality-sized filter — so the
+    exact seen check (no seen-side shuffle) and a cardinality-sized
+    filter, whose probe and update the engine picks by size — so the
     scale path has a tracked number next to the default path."""
     from pyspark.sql import functions as F
 
@@ -143,11 +143,12 @@ def run_frontier(
         # the 10^10-URL knob set = the SAME engine with honest sizes:
         # bucket-pruned seen membership (zero seen-side shuffle) + a
         # bloom sized to the real url count.  Probe mode and bloom
-        # build stay AUTO — they flip to the sharded-mmap probe /
-        # executor-side bitmap build exactly when the bitmap outgrows
-        # broadcast (bloom_broadcast_max_bytes) or the frontier
-        # outgrows the driver (distributed_bloom_threshold); forcing
-        # them below those sizes only adds overhead (measured r5:
+        # build are chosen by size — they flip to the sharded-mmap
+        # probe / executor-side bitmap build exactly when the bitmap
+        # outgrows broadcast (frontier.BLOOM_BROADCAST_MAX_BYTES) or
+        # the frontier outgrows the driver
+        # (frontier.DISTRIBUTED_BLOOM_THRESHOLD); forcing them below
+        # those sizes only adds overhead (measured r5:
         # sharded probe +0.2s/round at a 17 MB bitmap, distributed
         # build +3.5s/6 rounds at a 600k frontier) and the isolated
         # benches in §2.7 cover their own scale points.
@@ -425,7 +426,6 @@ def run_compaction(
         FrontierConfig(
             seen_anti_join="bucket_pruned",
             n_seen_buckets=n_buckets,
-            cache_pages=False,
         ),
     )
     seen_paths = []
@@ -1459,8 +1459,8 @@ both ways on identical data and asserts bit-identity:
 
 The distributed branch ships one {b['filter_mb']} MB bitmap set per
 round instead of the delta's raw rows, keeps the hash work on
-executors, and is the measured path in the `--big --scale-config`
-pipeline run (distributed_bloom_threshold=0).
+executors, and is the path a crawl round takes once its frontier
+reaches `frontier.DISTRIBUTED_BLOOM_THRESHOLD` rows.
 """)
     g = summary.get("pagerank")
     if g:

@@ -26,10 +26,11 @@ cluster (state.py docstring).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bloom import ShardedBloom, bloom_probe_udf
@@ -54,64 +55,64 @@ FETCHED_COLS = [
 ]
 
 
+# Plan selectors.  Each is the size at which a round switches to its
+# scale path; the size itself is measured (the manifest's
+# ``frontier_size`` and ``seen_rows``, the live filter's bytes), so
+# none of them is a setting.  The round reads them as module globals
+# at call time: a test forces a branch by monkeypatching the constant.
+
+# below this frontier size the deterministic global rank uses a
+# cheap single-partition window; above it, the scalable two-pass
+# range-partitioned rank (operators/rank.py)
+SMALL_RANK_THRESHOLD = 200_000
+# LSM-style seen layout (r5): per-round deltas below this size write
+# FLAT — no pre-repartition, no dynamic-partition writer, two fewer
+# stages in the per-round floor (measured +1.3s/round for a 65k-row
+# delta written bucketed).  The probe-inverted reader streams small
+# flat roots through every task's is_in at negligible cost, and
+# compaction folds them into bucketed snapshots on its normal
+# cadence.  Deltas larger than this (the prior frontier size is the
+# driver-known proxy) write bucketed directly — at 10^7-row rounds a
+# flat delta would be re-read whole by every one of the 4096 tasks.
+SEEN_DELTA_FLAT_MAX_ROWS = 2_000_000
+# above this frontier size the round's bloom update is built
+# executor-side (shard bitmaps ORed on the driver) instead of
+# collecting raw hashes — see functions/bloom.build_shard_bitmaps
+DISTRIBUTED_BLOOM_THRESHOLD = 1_000_000
+# discovery-probe strategy by filter size: up to this many bytes the
+# whole filter is broadcast to every executor (fine to tens of MB);
+# above it the links repartition by pmod(host_hash, n_shards) and
+# each task mmap-loads only its partition's shard bitmaps (the
+# 10^10-URL path — a useful filter there is ~10-15 GB, far beyond
+# broadcast)
+BLOOM_BROADCAST_MAX_BYTES = 64 << 20
+# seen_anti_join='auto' crossover: cumulative seen rows at/above
+# which the bucket-pruned membership path wins.  Measured locally at
+# ~1M (BENCH/BASELINE.md §2.5: shuffle 1.2s vs bucket 0.7s at 1M,
+# diverging to 6.1s vs 0.7s at 50M); the count used is the sum of
+# delta-file footer rows — an append-only UPPER bound on live
+# membership (tombstones not subtracted until compaction), which errs
+# toward the flat-cost path, the safe direction.
+SEEN_AUTO_CROSSOVER_ROWS = 1_000_000
+
+
 @dataclass
 class FrontierConfig:
     max_rounds: int = 64
     n_salts: int = 16
     n_seen_buckets: int = 32
-    bloom_bits_per_shard: int = 1 << 20
-    bloom_hashes: int = 5
     emit_deferred: bool = True  # log over_budget rows (FIXTURES.md §4)
     seed_validation: str = "quarantine"  # F2: quarantine | fail | ignore
-    cache_pages: bool = True  # cache (url, html) projection (see __init__)
-    # below this frontier size the deterministic global rank uses a
-    # cheap single-partition window; above it, the scalable two-pass
-    # range-partitioned rank (operators/rank.py)
-    small_rank_threshold: int = 200_000
     # compact once the manifest lists this many seen roots; the
     # size-tiered compact_seen then merges only the newest roots and
     # keeps the large older snapshots under their paths
     compact_seen_every: int = 8
-    # LSM-style seen layout (r5): per-round deltas below this size
-    # write FLAT — no pre-repartition, no dynamic-partition writer,
-    # two fewer stages in the per-round floor (measured +1.3s/round
-    # for a 65k-row delta written bucketed).  The probe-inverted
-    # reader streams small flat roots through every task's is_in at
-    # negligible cost, and compaction folds them into bucketed
-    # snapshots on its normal cadence.  Deltas larger than this (the
-    # prior frontier size is the driver-known proxy) write bucketed
-    # directly — at 10^7-row rounds a flat delta would be re-read
-    # whole by every one of the 4096 tasks.
-    seen_delta_flat_max_rows: int = 2_000_000
-    # AQE re-plans each shuffle as a separate stage with a driver
-    # barrier; the round loop's shuffles are fixed-key and pre-salted
-    # (skew handled explicitly), so adaptive re-planning buys nothing
-    # and its per-stage scheduling dominates small/medium rounds
-    # (measured: 2.2x round throughput with it off at local[32]).
-    # Re-enable on clusters where join skew is not pre-salted.
-    adaptive: bool = False
     # T4 retry jitter (ws_client_internal.rs:216-252 adds random 1-9s
     # to 429 backoff).  The reference uses `rand`; determinism demands
     # a seeded equivalent: jitter = pmod(xxhash64(host, round), mod).
     # 0 disables (required for oracle-exact runs; the oracle models
     # no jitter).
     jitter_mod: int = 0
-    # submit independent snapshot writes from concurrent driver
-    # threads (fetched log / host_state / seen delta share only the
-    # persisted fetch result) — overlaps per-round commit latency
-    concurrent_writes: bool = True
-    # above this frontier size the round's bloom update is built
-    # executor-side (shard bitmaps ORed on the driver) instead of
-    # collecting raw hashes — see functions/bloom.build_shard_bitmaps
-    distributed_bloom_threshold: int = 1_000_000
-    # discovery-probe strategy: 'broadcast' ships the whole filter to
-    # every executor (fine to tens of MB), 'sharded' repartitions the
-    # links by pmod(host_hash, n_shards) and each task mmap-loads only
-    # its partition's shard bitmaps (the 10^10-URL path — a useful
-    # filter there is ~10-15 GB, far beyond broadcast). 'auto' picks
-    # by filter size.
-    bloom_probe_mode: str = "auto"  # auto | broadcast | sharded
-    bloom_broadcast_max_bytes: int = 64 << 20
     # counting-filter mode (the north-rule cuckoo-style fallback for
     # deletions): forget() then also DELETES from the filter, so
     # forgotten urls go back to the fast definitely-unseen path
@@ -121,10 +122,11 @@ class FrontierConfig:
     # way (the exact anti-join is the authority).
     bloom_counting: bool = False
     # expected total distinct URLs for the whole crawl: when set, the
-    # filter is sized by the standard bloom formulas instead of the
-    # fixed bits_per_shard (ShardedBloom.for_cardinality) — at 10^10
-    # URLs / 1% fp that's ~12 GB of bits, which is exactly why the
-    # sharded probe path exists
+    # filter is sized by the standard bloom formulas instead of
+    # ShardedBloom's fixed default dimensions
+    # (ShardedBloom.for_cardinality) — at 10^10 URLs / 1% fp that's
+    # ~12 GB of bits, which is exactly why the sharded probe path
+    # exists
     bloom_expected_urls: int | None = None
     # record per-phase wall times into each round's manifest entry
     # ("timings") — for diagnosing the serial floor; no effect on
@@ -133,18 +135,17 @@ class FrontierConfig:
     # exact seen-membership strategy for discovery:
     #   'auto'           (default) pick per ROUND by the manifest's
     #                    cumulative seen row count: 'shuffle' below
-    #                    seen_auto_crossover_rows, 'bucket_pruned' at
+    #                    SEEN_AUTO_CROSSOVER_ROWS, 'bucket_pruned' at
     #                    or above it — the measured crossover is ~1M
     #                    rows (BENCH/BASELINE.md §2.5, flat ~0.7s
     #                    probe vs a shuffle that grows with the seen
     #                    set).  Deltas are ALWAYS written in the
     #                    bucketed layout under auto so the switch
     #                    never re-writes history (the bucket reader
-    #                    also handles legacy flat roots).  This is
-    #                    the bloom_probe_mode='auto' discipline for
-    #                    the OTHER 10^10 knob: a default-config crawl
-    #                    now engages the no-shuffle path the moment
-    #                    its seen set earns it (VERDICT r5 next-1).
+    #                    also handles legacy flat roots).  A
+    #                    default-config crawl engages the no-shuffle
+    #                    path the moment its seen set earns it
+    #                    (VERDICT r5 next-1).
     #   'shuffle'        left_anti join — shuffles the WHOLE seen set
     #                    on url every round (fine until the seen set
     #                    dwarfs the cluster's shuffle capacity; on
@@ -156,14 +157,6 @@ class FrontierConfig:
     #                    n_seen_buckets so one bucket's urls fit a
     #                    task; operators/seenjoin.py)
     seen_anti_join: str = "auto"
-    # 'auto' crossover: cumulative seen rows at/above which the
-    # bucket-pruned membership path wins.  Measured locally at ~1M
-    # (BENCH/BASELINE.md §2.5: shuffle 1.2s vs bucket 0.7s at 1M,
-    # diverging to 6.1s vs 0.7s at 50M); the count used is the sum of
-    # delta-file footer rows — an append-only UPPER bound on live
-    # membership (tombstones not subtracted until compaction), which
-    # errs toward the flat-cost path, the safe direction.
-    seen_auto_crossover_rows: int = 1_000_000
     # crawler-trap suppression (operators/traps.py): when set, each
     # round counts confirmed-NEW discovered urls per (host,
     # digit-masked path template) into a cumulative template table
@@ -183,10 +176,20 @@ class FrontierConfig:
     # one-sided.  This is the 100 TB configuration; the default
     # (False) canonicalizes + caches for ad-hoc corpora.
     pages_canonical: bool = False
-    unknown_rank: int = UNKNOWN_RANK
     default_budget: int = DEFAULT_BUDGET
-    default_delay: int = DEFAULT_DELAY
-    max_backoff: int = MAX_BACKOFF
+
+    def __post_init__(self):
+        # checked here, before init_state commits any state
+        if self.seen_anti_join not in ("auto", "shuffle", "bucket_pruned"):
+            raise ValueError(
+                "seen_anti_join must be auto|shuffle|bucket_pruned, "
+                f"got {self.seen_anti_join!r}"
+            )
+        if self.seed_validation not in ("quarantine", "fail", "ignore"):
+            raise ValueError(
+                "seed_validation must be quarantine|fail|ignore, "
+                f"got {self.seed_validation!r}"
+            )
 
 
 def parquet_row_count(paths: list[str] | str) -> int:
@@ -261,8 +264,8 @@ def materialize_canonical_pages(
     subsequent crawl session's fetch join is one-sided (scheduled
     side shuffles into the bucketing; the pages table never moves).
 
-    Pair with ``FrontierConfig(pages_canonical=True,
-    cache_pages=False)`` and ``spark.table(table)``.  On a cluster
+    Pair with ``FrontierConfig(pages_canonical=True)`` (which also
+    skips the pages cache) and ``spark.table(table)``.  On a cluster
     the same statement targets an Iceberg table with
     ``bucket(n, url)`` partitioning; locally it lands in the session
     warehouse (in-session catalog) which is enough to pin the plan
@@ -374,7 +377,6 @@ class FrontierScheduler:
                         "max_by(html, struct(warc_ts, xxhash64(html)))"
                     ).alias("html")
                 )
-        if self.cfg.cache_pages and not self.cfg.pages_canonical:
             # cache the (url, html) fetch projection so the
             # canonicalize UDF runs once, not once per round-job, and
             # pre-partition it on the join key: InMemoryTableScan
@@ -399,12 +401,19 @@ class FrontierScheduler:
 
     @_ctx
     def _engine_conf(self):
-        """Apply the round-loop conf (AQE per FrontierConfig.adaptive)
-        for the duration of an engine operation, then restore — the
-        session is shared with ad-hoc queries that may want AQE."""
+        """Turn AQE off for the duration of an engine operation, then
+        restore — the session is shared with ad-hoc queries that may
+        want AQE.
+
+        AQE re-plans each shuffle as a separate stage with a driver
+        barrier; the round loop's shuffles are fixed-key and
+        pre-salted (skew handled explicitly), so adaptive re-planning
+        buys nothing and its per-stage scheduling dominates
+        small/medium rounds (measured: 2.2x round throughput with it
+        off at local[32])."""
         key = "spark.sql.adaptive.enabled"
         prev = self.spark.conf.get(key)
-        self.spark.conf.set(key, str(self.cfg.adaptive).lower())
+        self.spark.conf.set(key, "false")
         try:
             yield
         finally:
@@ -439,10 +448,10 @@ class FrontierScheduler:
         cfg = self.cfg
         joined = df.join(F.broadcast(self.policy), "host", "left")
         defaults = {
-            "host_rank": F.lit(cfg.unknown_rank),
+            "host_rank": F.lit(UNKNOWN_RANK),
             "budget_per_round": F.lit(cfg.default_budget),
             "robots_disallow": F.array().cast("array<string>"),
-            "crawl_delay_rounds": F.lit(cfg.default_delay),
+            "crawl_delay_rounds": F.lit(DEFAULT_DELAY),
             "is_hot": F.lit(False),
         }
         cols = [
@@ -450,7 +459,7 @@ class FrontierScheduler:
             for c in joined.columns
             if c != "priority"  # replaced below, like withColumn did
         ]
-        host_rank = F.coalesce("host_rank", F.lit(cfg.unknown_rank))
+        host_rank = F.coalesce("host_rank", F.lit(UNKNOWN_RANK))
         return joined.select(
             *cols, (F.col("depth") + host_rank).cast("long").alias("priority")
         )
@@ -498,18 +507,13 @@ class FrontierScheduler:
         'bucket_pruned'.  Under 'auto' the decision is the manifest's
         cumulative ``seen_rows`` (maintained per round from delta
         footer counts; derived once by a footer walk when resuming a
-        pre-auto state dir) against ``seen_auto_crossover_rows``."""
+        pre-auto state dir) against ``SEEN_AUTO_CROSSOVER_ROWS``."""
         mode = self.cfg.seen_anti_join
-        if mode not in ("auto", "shuffle", "bucket_pruned"):
-            raise ValueError(
-                f"seen_anti_join must be auto|shuffle|bucket_pruned, "
-                f"got {mode!r}"
-            )
         if mode != "auto":
             return mode
         return (
             "bucket_pruned"
-            if self._seen_rows(manifest) >= self.cfg.seen_auto_crossover_rows
+            if self._seen_rows(manifest) >= SEEN_AUTO_CROSSOVER_ROWS
             else "shuffle"
         )
 
@@ -595,9 +599,7 @@ class FrontierScheduler:
         )
         # counted on the write, as _run_round counts next_frontier: with
         # the size known, round 0 takes the same size-gated branches as
-        # every later round instead of the absent-size "assume big" ones
-        from pyspark.sql import Observation
-
+        # every later round
         obs = Observation()
         frontier = frontier.observe(obs, F.count(F.lit(1)).alias("n"))
         fpath = self.store.write(frontier, 0, "frontier")
@@ -610,10 +612,7 @@ class FrontierScheduler:
             )
         else:
             bloom = ShardedBloom(
-                self.cfg.n_seen_buckets,
-                self.cfg.bloom_bits_per_shard,
-                self.cfg.bloom_hashes,
-                counting=self.cfg.bloom_counting,
+                self.cfg.n_seen_buckets, counting=self.cfg.bloom_counting
             )
         bpath = self.store.round_dir(0, "bloom")
         bloom.save(bpath)
@@ -879,13 +878,13 @@ class FrontierScheduler:
         delta via :meth:`forget`, the merged frontier under a
         unique per-call path; a crash between them leaves the prior
         manifest fully consistent."""
+        if ttl_rounds < 1:
+            raise ValueError("ttl_rounds must be >= 1")
         manifest = manifest or self.store.read_manifest()
         rnd = manifest["round"]
         seen = self._read_seen(manifest)
         if seen is None:
             return manifest
-        if ttl_rounds < 1:
-            raise ValueError("ttl_rounds must be >= 1")
         # one seen-set scan, not three: the stale list is consumed by
         # the emptiness probe, the tombstone write AND the frontier
         # merge — checkpoint it so the full delta-union + tombstone
@@ -906,11 +905,15 @@ class FrontierScheduler:
             # freshness pass in the same round must not overwrite a
             # frontier an earlier commit references
             fname = f"frontier_recrawl_{len(manifest.get('tombstones', []))}"
+            # counted on the write, as init_state and _run_round count
+            # theirs: the next round sizes its plan from the merged
+            # frontier, however many stale urls it re-enqueued
+            obs = Observation()
+            merged = merged.observe(obs, F.count(F.lit(1)).alias("n"))
             fpath = self.store.write(merged, rnd, fname)
         new_manifest = dict(manifest)
         new_manifest["frontier"] = fpath
-        # force run() to re-derive emptiness from the new frontier
-        new_manifest.pop("frontier_size", None)
+        new_manifest["frontier_size"] = int(obs.get["n"])
         self.store.commit(new_manifest)
         return new_manifest
 
@@ -929,6 +932,8 @@ class FrontierScheduler:
 
         cfg = self.cfg
         rnd = manifest["round"]
+        # the size the round plans from: every manifest carries it
+        size = manifest["frontier_size"]
         # one scope owns the round's persisted intermediates and
         # broadcasts and releases them once the round's writes are
         # done — a 64+-round crawl must not accumulate them on
@@ -974,10 +979,7 @@ class FrontierScheduler:
             # produce the identical total order.
             _mark("plan_build_sched")
             sched_slim = scheduled.select("url", "host", "depth", "priority")
-            if (
-                manifest.get("frontier_size", cfg.small_rank_threshold)
-                < cfg.small_rank_threshold
-            ):
+            if size < SMALL_RANK_THRESHOLD:
                 from pyspark.sql import Window
 
                 w = Window.orderBy("priority", "url")
@@ -1076,7 +1078,7 @@ class FrontierScheduler:
             ).select(
                 "host",
                 "any_ok",
-                F.coalesce("crawl_delay_rounds", F.lit(cfg.default_delay)).alias(
+                F.coalesce("crawl_delay_rounds", F.lit(DEFAULT_DELAY)).alias(
                     "crawl_delay_rounds"
                 ),
             )
@@ -1084,7 +1086,7 @@ class FrontierScheduler:
             new_backoff = (
                 F.when(F.col("any_ok").isNull(), old_backoff)
                 .when(F.col("any_ok"), F.lit(1))
-                .otherwise(F.least(old_backoff * 2, F.lit(cfg.max_backoff)))
+                .otherwise(F.least(old_backoff * 2, F.lit(MAX_BACKOFF)))
             )
             jitter = (
                 F.pmod(F.xxhash64(F.col("host"), F.lit(rnd)), F.lit(cfg.jitter_mod))
@@ -1104,22 +1106,10 @@ class FrontierScheduler:
                 fetched.select("url", "host").unionByName(denied.select("url", "host")),
                 rnd,
             )
-            seen_partition = self._seen_partition_by
-            # frontier_size is POPPED by recrawl_stale (it must force the
-            # run loop to re-probe emptiness) — when absent, assume BIG
-            # (ADVICE r5): a TTL recrawl can re-enqueue millions of stale
-            # urls, and writing that delta flat hands every one of the
-            # n_buckets bucket-pruned tasks the whole multi-million-row
-            # root, the exact pathology seen_delta_flat_max_rows exists
-            # to avoid.  A small recrawl written bucketed costs one tiny
-            # shuffle — cheap in the wrong direction.
-            if seen_partition and (
-                manifest.get("frontier_size", cfg.seen_delta_flat_max_rows + 1)
-                <= cfg.seen_delta_flat_max_rows
-            ):
-                # LSM layout: small delta -> flat file, compaction buckets
-                seen_partition = None
-            if seen_partition:
+            # LSM layout: small delta -> flat file, compaction buckets
+            seen_partition = None
+            if self._seen_partition_by and size > SEEN_DELTA_FLAT_MAX_ROWS:
+                seen_partition = self._seen_partition_by
                 seen_delta = seen_delta.repartition(
                     cfg.n_seen_buckets,
                     F.pmod(F.col("host_hash"), F.lit(cfg.n_seen_buckets)),
@@ -1137,25 +1127,16 @@ class FrontierScheduler:
             # jobs block per-partition until cached).  This overlaps the
             # serial per-round commit term with itself, the main Amdahl
             # cost of small rounds.
-            if cfg.concurrent_writes:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(3) as pool:
-                    fa = pool.submit(self.store.write, log, rnd, "fetched")
-                    fb = pool.submit(self.store.write, new_state, rnd + 1, "host_state")
-                    fc = pool.submit(
-                        self.store.write, seen_delta, rnd, "seen_delta",
-                        None, seen_partition,
-                    )
-                    fetched_path = fa.result()
-                    host_state_path = fb.result()
-                    seen_path = fc.result()
-            else:
-                fetched_path = self.store.write(log, rnd, "fetched")
-                host_state_path = self.store.write(new_state, rnd + 1, "host_state")
-                seen_path = self.store.write(
-                    seen_delta, rnd, "seen_delta", partition_by=seen_partition
+            with ThreadPoolExecutor(3) as pool:
+                fa = pool.submit(self.store.write, log, rnd, "fetched")
+                fb = pool.submit(self.store.write, new_state, rnd + 1, "host_state")
+                fc = pool.submit(
+                    self.store.write, seen_delta, rnd, "seen_delta",
+                    None, seen_partition,
                 )
+                fetched_path = fa.result()
+                host_state_path = fb.result()
+                seen_path = fc.result()
             seen_delta = self.store.read(seen_path)
             _mark("fetch_and_state_writes")
 
@@ -1164,20 +1145,14 @@ class FrontierScheduler:
             # the driver ORs at most n_shards fixed-size arrays — collect
             # volume independent of row count (the 10^10-scale path).
             if (
-                # absent frontier_size (popped by recrawl_stale) => assume
-                # BIG, same reasoning as the delta-layout decision above:
-                # the distributed path is bit-identical, while collecting
-                # raw hashes of a multi-million-row recrawl delta is a
-                # driver OOM
-                manifest.get("frontier_size", cfg.distributed_bloom_threshold)
-                >= cfg.distributed_bloom_threshold
+                size >= DISTRIBUTED_BLOOM_THRESHOLD
                 and not cfg.bloom_counting  # bitmap OR-merge is bits-only
             ):
                 from ..functions.bloom import build_shard_bitmaps, merge_shard_bitmaps
 
                 # shard bitmaps MUST match the live filter's dimensions —
                 # when bloom_expected_urls sizes the filter via
-                # for_cardinality, cfg.bloom_bits_per_shard/bloom_hashes
+                # for_cardinality, ShardedBloom's default dimensions
                 # differ from bloom.bits_per_shard/n_hashes and an OR of
                 # mismatched arrays would crash (or worse, silently set
                 # wrong bits => bloom false negatives => re-crawls)
@@ -1242,11 +1217,7 @@ class FrontierScheduler:
             # bloom prefilter: probe==False is DEFINITELY unseen (skips the
             # exact join); probe==True goes to the exact anti-join which
             # kills false positives — correctness never depends on bloom.
-            use_sharded = cfg.bloom_probe_mode == "sharded" or (
-                cfg.bloom_probe_mode == "auto"
-                and bloom._arr.nbytes > cfg.bloom_broadcast_max_bytes
-            )
-            if use_sharded:
+            if bloom._arr.nbytes > BLOOM_BROADCAST_MAX_BYTES:
                 # partition-aligned probe: co-locate links with their seen
                 # bucket, each task mmap-reads only its shards' bitmaps
                 # from the just-saved snapshot (bit-identical to broadcast;
@@ -1319,8 +1290,6 @@ class FrontierScheduler:
             # frontier size piggybacks on the write job as an observed
             # metric — previously a separate read-back count job, part of
             # the per-round serial floor
-            from pyspark.sql import Observation
-
             obs = Observation()
             next_frontier = next_frontier.observe(obs, F.count(F.lit(1)).alias("n"))
 
@@ -1378,17 +1347,11 @@ class FrontierScheduler:
             # (links/fetched/cand) — submit concurrently like the earlier
             # snapshot writes; the observation resolves with the frontier
             # write action
-            if cfg.concurrent_writes:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(2) as pool:
-                    ff = pool.submit(self.store.write, next_frontier, rnd + 1, "frontier")
-                    fm = pool.submit(self.store.write, metrics, rnd, "metrics", partitions=1)
-                    frontier_path = ff.result()
-                    metrics_path = fm.result()
-            else:
-                frontier_path = self.store.write(next_frontier, rnd + 1, "frontier")
-                metrics_path = self.store.write(metrics, rnd, "metrics", partitions=1)
+            with ThreadPoolExecutor(2) as pool:
+                ff = pool.submit(self.store.write, next_frontier, rnd + 1, "frontier")
+                fm = pool.submit(self.store.write, metrics, rnd, "metrics", partitions=1)
+                frontier_path = ff.result()
+                metrics_path = fm.result()
 
             n_frontier = int(obs.get["n"])
             _mark("discovery_and_frontier_writes")
@@ -1437,17 +1400,16 @@ class FrontierScheduler:
             new_manifest["timings_history"] = manifest.get(
                 "timings_history", []
             ) + [dict(new_manifest["timings"], round=rnd)]
+        t0 = _time.perf_counter()
+        self.store.commit(new_manifest)
+        if cfg.profile_rounds:
             # the manifest can't carry its OWN commit time — record it
             # driver-side so the profile covers the full serial floor
-            t0 = _time.perf_counter()
-            self.store.commit(new_manifest)
             self.profile_commits = getattr(self, "profile_commits", [])
             self.profile_commits.append(
                 {"round": rnd,
                  "manifest_commit": round(_time.perf_counter() - t0, 3)}
             )
-        else:
-            self.store.commit(new_manifest)
         return new_manifest
 
     # -- full crawl ------------------------------------------------------
@@ -1478,12 +1440,15 @@ class FrontierScheduler:
                     "the bucketed seen/tombstone layout (re-bucket via seen "
                     "compaction with the old config first)"
                 )
-        while manifest["round"] < max_rounds:
-            if manifest.get("frontier_size") == 0:
-                break
             if "frontier_size" not in manifest:
-                if self.store.read(manifest["frontier"]).isEmpty():
-                    break
+                # a state dir committed before every manifest carried
+                # the frontier's size: count it once; every round
+                # commits the size of the frontier it writes
+                manifest = dict(
+                    manifest,
+                    frontier_size=self.store.read(manifest["frontier"]).count(),
+                )
+        while manifest["round"] < max_rounds and manifest["frontier_size"]:
             manifest = self.run_round(manifest)
         return manifest
 

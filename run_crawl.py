@@ -71,9 +71,6 @@ def main(argv=None):
         help="counting filter: forget() also deletes from the bloom",
     )
     ap.add_argument(
-        "--bloom-probe", choices=["auto", "broadcast", "sharded"], default="auto",
-    )
-    ap.add_argument(
         "--seen-anti-join", choices=["auto", "shuffle", "bucket_pruned"],
         default="auto",
         help="auto (default) switches shuffle->bucket_pruned at the "
@@ -133,7 +130,6 @@ def main(argv=None):
         n_seen_buckets=args.seen_buckets,
         bloom_expected_urls=args.expected_urls,
         bloom_counting=args.bloom_counting,
-        bloom_probe_mode=args.bloom_probe,
         seen_anti_join=args.seen_anti_join,
         profile_rounds=args.profile_rounds,
     )

@@ -238,18 +238,21 @@ def test_sharded_probe_bit_identical(spark, tmp_path):
     assert out.a.to_numpy()[:200].all()
 
 
-def test_engine_sharded_probe_matches_oracle(spark, tmp_path):
-    """Full e2e with bloom_probe_mode='sharded': identical crawl
-    ordering + seen set as the sequential oracle."""
+def test_engine_sharded_probe_matches_oracle(spark, tmp_path, monkeypatch):
+    """Full e2e with the sharded probe (forced by a zero broadcast
+    limit): identical crawl ordering + seen set as the sequential
+    oracle."""
+    from crypto_crawler_rs_spark.plans import frontier as frontier_mod
     from crypto_crawler_rs_spark.plans.frontier import FrontierConfig, FrontierScheduler
     from crypto_crawler_rs_spark.plans.oracle import OracleCrawler
     from crypto_crawler_rs_spark.sources.fixtures import corpus_to_spark, gen_corpus
 
     corpus = gen_corpus(n_pages=100, n_hosts=6, n_seeds=8, seed=23)
     sdfs = corpus_to_spark(spark, corpus)
+    monkeypatch.setattr(frontier_mod, "BLOOM_BROADCAST_MAX_BYTES", 0)
     eng = FrontierScheduler(
         spark, sdfs["pages"], sdfs["host_policy"], str(tmp_path / "s"),
-        FrontierConfig(max_rounds=4, n_seen_buckets=8, bloom_probe_mode="sharded"),
+        FrontierConfig(max_rounds=4, n_seen_buckets=8),
     )
     m = eng.run(seeds=sdfs["seeds"], max_rounds=4)
     exp = OracleCrawler(corpus["pages"], corpus["host_policy"]).run(

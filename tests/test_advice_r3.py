@@ -54,24 +54,26 @@ def test_counting_incremental_adds_saturate_across_calls():
     assert bloom.probe(hh, uh)[0]
 
 
-def test_distributed_bloom_uses_live_filter_dims(spark, tmp_path):
+def test_distributed_bloom_uses_live_filter_dims(spark, tmp_path, monkeypatch):
     """bloom_expected_urls (for_cardinality sizing) combined with the
     distributed bitmap build: shard bitmaps must be built with the
-    live filter's bits/hashes, not cfg defaults — the advertised
-    10^10-scale combo.  Crawl must stay oracle-exact."""
+    live filter's bits/hashes, not ShardedBloom's defaults — the
+    advertised 10^10-scale combo.  Crawl must stay oracle-exact."""
+    from crypto_crawler_rs_spark.plans import frontier as frontier_mod
     from crypto_crawler_rs_spark.plans.frontier import FrontierConfig, FrontierScheduler
     from crypto_crawler_rs_spark.plans.oracle import OracleCrawler
     from crypto_crawler_rs_spark.sources.fixtures import corpus_to_spark, gen_corpus
 
     corpus = gen_corpus(n_pages=80, n_hosts=4, n_seeds=8, seed=53)
     sdfs = corpus_to_spark(spark, corpus)
+    # force the bitmap-build branch
+    monkeypatch.setattr(frontier_mod, "DISTRIBUTED_BLOOM_THRESHOLD", 1)
     eng = FrontierScheduler(
         spark, sdfs["pages"], sdfs["host_policy"], str(tmp_path / "s"),
         FrontierConfig(
             max_rounds=4,
             n_seen_buckets=4,
-            bloom_expected_urls=10_000,   # for_cardinality dims != cfg dims
-            distributed_bloom_threshold=1,  # force the bitmap-build branch
+            bloom_expected_urls=10_000,   # for_cardinality dims != default dims
         ),
     )
     m = eng.run(seeds=sdfs["seeds"], max_rounds=4)
@@ -88,7 +90,7 @@ def test_distributed_bloom_uses_live_filter_dims(spark, tmp_path):
     # the saved filter must carry the for_cardinality dimensions AND
     # have absorbed the distributed-built deltas (no false negatives)
     bl = ShardedBloom.load(m["bloom"])
-    assert bl.bits_per_shard != FrontierConfig().bloom_bits_per_shard
+    assert bl.bits_per_shard != ShardedBloom().bits_per_shard
     seen_rows = (
         eng.seen(m).select("host_hash", "url_hash").toPandas()
     )

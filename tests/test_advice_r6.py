@@ -3,9 +3,11 @@
 1. connected_components only broadcast-hints neighbor_min under a
    DEGREE-AWARE bound (n_changed * max_degree): a hub graph must not
    hint a ~N-row broadcast just because the delta is small.
-2. the round after recrawl_stale (frontier_size popped) writes the
-   seen delta BUCKETED, not flat — a multi-million-row recrawl delta
-   written flat is re-read whole by every bucket-pruned task.
+2. recrawl_stale commits the merged frontier's size, so the next
+   round plans from it: a recrawl past the flat-delta limit writes
+   its seen delta BUCKETED — a multi-million-row recrawl delta
+   written flat is re-read whole by every bucket-pruned task — and a
+   manifest without the size is counted once on resume.
 3. the seenjoin IPC cache defaults to a per-uid 0700 directory and
    refuses a directory with foreign ownership / group-or-world access
    (another user could plant/evict .arrow files in a shared path).
@@ -80,9 +82,9 @@ def test_components_bounded_degree_still_broadcasts_neighbor_min(
     assert ("node", "nbr_min") in calls
 
 
-# -- 2: recrawl round writes the seen delta bucketed ------------------
+# -- 2: the frontier size after recrawl_stale ---------------------------
 
-def test_post_recrawl_seen_delta_is_bucketed(spark, tmp_path):
+def _recrawl_env(spark, tmp_path):
     from crypto_crawler_rs_spark.plans.frontier import (
         FrontierConfig,
         FrontierScheduler,
@@ -106,21 +108,68 @@ def test_post_recrawl_seen_delta_is_bucketed(spark, tmp_path):
         ),
     )
     m = eng.run(seeds=sdfs["seeds"], max_rounds=2)
+    return eng, corpus, m
+
+
+def _is_bucketed(root):
+    return any(
+        e.name.startswith("bucket=") for e in os.scandir(root) if e.is_dir()
+    )
+
+
+def test_recrawl_commits_merged_frontier_size(spark, tmp_path):
+    eng, _, m = _recrawl_env(spark, tmp_path)
     # normal rounds at this size write FLAT deltas (LSM small-root path)
-    assert not any(
-        e.name.startswith("bucket=")
-        for e in os.scandir(m["seen"][-1])
-        if e.is_dir()
-    )
+    assert not _is_bucketed(m["seen"][-1])
     m2 = eng.recrawl_stale(ttl_rounds=m["round"], manifest=m)
-    assert "frontier_size" not in m2  # the popped-key precondition
+    n = eng.store.read(m2["frontier"]).count()
+    assert n > m["frontier_size"]  # stale urls were re-enqueued
+    assert m2["frontier_size"] == n
+    assert eng.store.read_manifest()["frontier_size"] == n
+    # the next round plans from that size: a small recrawl writes its
+    # seen delta flat, like any round of that size
     m3 = eng.run_round(m2)
-    # the post-recrawl round must assume BIG and write bucketed
-    assert any(
-        e.name.startswith("bucket=")
-        for e in os.scandir(m3["seen"][-1])
-        if e.is_dir()
+    assert not _is_bucketed(m3["seen"][-1])
+
+
+def test_post_recrawl_seen_delta_is_bucketed(spark, tmp_path, monkeypatch):
+    """A recrawl that re-enqueues more urls than the flat-delta limit
+    writes its seen delta bucketed: a multi-million-row delta written
+    flat is re-read whole by every bucket-pruned task (ADVICE r5)."""
+    from crypto_crawler_rs_spark.plans import frontier as frontier_mod
+
+    eng, _, m = _recrawl_env(spark, tmp_path)
+    m2 = eng.recrawl_stale(ttl_rounds=m["round"], manifest=m)
+    monkeypatch.setattr(
+        frontier_mod, "SEEN_DELTA_FLAT_MAX_ROWS", m2["frontier_size"] - 1
     )
+    m3 = eng.run_round(m2)
+    assert _is_bucketed(m3["seen"][-1])
+
+
+def test_resume_without_frontier_size_matches_oracle(spark, tmp_path):
+    """A manifest committed before every manifest carried
+    ``frontier_size`` is counted once on resume, and the crawl stays
+    oracle-identical."""
+    from crypto_crawler_rs_spark.plans.oracle import OracleCrawler
+
+    eng, corpus, m = _recrawl_env(spark, tmp_path)
+    del m["frontier_size"]
+    eng.store.commit(m)
+    m2 = eng.run(max_rounds=5)
+    assert m2["round"] > m["round"]
+    exp = OracleCrawler(corpus["pages"], corpus["host_policy"]).run(
+        corpus["seeds"], max_rounds=5
+    )
+    got = eng.fetched(m2).toPandas()
+    gs = got[got.status.isin(["ok", "missing"])].sort_values(
+        ["round", "rank_in_round"]
+    )
+    es = exp.fetched[exp.fetched.status.isin(["ok", "missing"])].sort_values(
+        ["round", "rank_in_round"]
+    )
+    assert gs["url"].tolist() == es["url"].tolist()
+    assert {r.url for r in eng.seen(m2).select("url").collect()} == exp.seen
 
 
 # -- 3: per-user, permission-checked IPC cache dir --------------------

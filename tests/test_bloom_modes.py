@@ -116,27 +116,26 @@ def test_engine_sized_bloom_matches_oracle(spark, tmp_path):
     assert {r["url"] for r in eng.seen(m).select("url").collect()} == exp.seen
 
 
-def test_engine_kitchen_sink_config_matches_oracle(spark, tmp_path):
+def test_engine_kitchen_sink_config_matches_oracle(spark, tmp_path, monkeypatch):
     """All round-2 knobs AT ONCE (sharded probe + counting filter +
-    sized bloom + profiling + concurrent writes off) must still match
-    the sequential oracle exactly — guards against config
-    interactions."""
+    sized bloom + profiling) must still match the sequential oracle
+    exactly — guards against config interactions."""
+    from crypto_crawler_rs_spark.plans import frontier as frontier_mod
     from crypto_crawler_rs_spark.plans.frontier import FrontierConfig, FrontierScheduler
     from crypto_crawler_rs_spark.plans.oracle import OracleCrawler
     from crypto_crawler_rs_spark.sources.fixtures import corpus_to_spark, gen_corpus
 
     corpus = gen_corpus(n_pages=90, n_hosts=5, n_seeds=8, seed=41)
     sdfs = corpus_to_spark(spark, corpus)
+    monkeypatch.setattr(frontier_mod, "BLOOM_BROADCAST_MAX_BYTES", 0)  # sharded probe
     eng = FrontierScheduler(
         spark, sdfs["pages"], sdfs["host_policy"], str(tmp_path / "s"),
         FrontierConfig(
             max_rounds=4,
             n_seen_buckets=4,
-            bloom_probe_mode="sharded",
             bloom_counting=True,
             bloom_expected_urls=5_000,
             profile_rounds=True,
-            concurrent_writes=False,
             compact_seen_every=2,
         ),
     )

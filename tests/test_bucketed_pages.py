@@ -1,6 +1,6 @@
 """The 100 TB pages path: materialize_canonical_pages writes a
 url-bucketed canonical pages table once; FrontierConfig(
-pages_canonical=True, cache_pages=False) then (a) crawls
+pages_canonical=True), which also skips the pages cache, then (a) crawls
 byte-identically to the default path and (b) plans the fetch join
 with the exchange on the SCHEDULED side only — the pages table never
 re-shuffles."""
@@ -51,7 +51,7 @@ def test_bucketed_canonical_pages_crawl_is_identical(spark, corpus, tmp_path):
     fast = _crawl(
         spark, bucketed, sdfs["host_policy"], sdfs["seeds"],
         str(tmp_path / "s_bucketed"),
-        pages_canonical=True, cache_pages=False,
+        pages_canonical=True,
     )
     assert list(default.columns) == list(fast.columns)
     assert default.equals(fast)  # ordering, status, text — byte-identical

@@ -19,7 +19,7 @@ def _run(spark, tmpdir, jitter_mod):
     )
     eng = FrontierScheduler(
         spark, pages, policy, tmpdir,
-        FrontierConfig(max_rounds=10, jitter_mod=jitter_mod, cache_pages=False),
+        FrontierConfig(max_rounds=10, jitter_mod=jitter_mod),
     )
     m = eng.run(seeds=seeds, max_rounds=10)
     f = eng.fetched(m).toPandas()

@@ -60,3 +60,19 @@ def test_recrawl_stale_noop_when_nothing_stale(spark, tmp_path):
     m = eng.run(seeds=sdfs["seeds"], max_rounds=2)
     m2 = eng.recrawl_stale(ttl_rounds=100, manifest=m)  # nothing that old
     assert m2 == m  # untouched manifest, no forget, no frontier write
+
+
+def test_recrawl_stale_rejects_ttl_below_one_without_seen_roots(spark, tmp_path):
+    """The TTL check runs before the no-seen-set early return: a
+    fresh state (no seen roots yet) still refuses ttl_rounds < 1."""
+    corpus = gen_corpus(n_pages=30, n_hosts=3, n_seeds=3, seed=17)
+    sdfs = corpus_to_spark(spark, corpus)
+    eng = FrontierScheduler(
+        spark, sdfs["pages"], sdfs["host_policy"],
+        str(tmp_path / "s"), FrontierConfig(n_seen_buckets=4),
+    )
+    m = eng.init_state(sdfs["seeds"])
+    assert m["seen"] == []
+    with pytest.raises(ValueError, match="ttl_rounds"):
+        eng.recrawl_stale(ttl_rounds=0, manifest=m)
+    assert eng.store.read_manifest() == m

@@ -2,7 +2,7 @@
 selects the seen-membership strategy per round from the manifest's
 cumulative seen row count — 'shuffle' below the crossover,
 'bucket_pruned' at/above it — so the 10^10 no-shuffle path engages
-without a manual knob, mirroring bloom_probe_mode='auto'.
+without a manual knob, as the Bloom probe picks its path by size.
 
 Pinned here:
 - a crawl whose seen set grows PAST the crossover mid-run stays
@@ -13,19 +13,22 @@ Pinned here:
   even when auto resolves to bucket_pruned over legacy roots;
 - seen_rows bookkeeping: append-only sum of delta footer counts,
   reset to the true size at compaction;
-- unknown mode strings raise instead of silently falling to shuffle.
+- unknown mode strings raise when the config is built, before any
+  state is committed, instead of silently falling to shuffle.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from crypto_crawler_rs_spark.plans import frontier as frontier_mod
 from crypto_crawler_rs_spark.plans.frontier import (
     FrontierConfig,
     FrontierScheduler,
     parquet_row_count,
 )
 from crypto_crawler_rs_spark.plans.oracle import OracleCrawler
+from crypto_crawler_rs_spark.plans.state import StateStore
 from crypto_crawler_rs_spark.sources.fixtures import corpus_to_spark, gen_corpus
 
 
@@ -53,17 +56,23 @@ def test_auto_is_default_and_validates():
 
 
 def test_unknown_mode_raises(spark, tmp_path):
-    corpus = gen_corpus(n_pages=30, n_hosts=3, n_seeds=3, seed=7)
-    sdfs = corpus_to_spark(spark, corpus)
-    eng = FrontierScheduler(
-        spark, sdfs["pages"], sdfs["host_policy"], str(tmp_path / "s"),
-        FrontierConfig(seen_anti_join="bogus"),
-    )
+    state = str(tmp_path / "s")
+    # refused when the config is built, before an engine exists whose
+    # init_state could commit a manifest, a frontier and a Bloom file
     with pytest.raises(ValueError, match="seen_anti_join"):
-        eng.run(seeds=sdfs["seeds"], max_rounds=2)
+        FrontierConfig(seen_anti_join="bogus")
+    assert StateStore(spark, state).read_manifest() is None
 
 
-def test_auto_crawl_matches_oracle_through_crossover(spark, tmp_path):
+def test_unknown_seed_validation_raises():
+    with pytest.raises(ValueError, match="seed_validation"):
+        FrontierConfig(seed_validation="bogus")
+
+
+def test_auto_crawl_matches_oracle_through_crossover(spark, tmp_path, monkeypatch):
+    # tiny crossover: round 0's delta (seeds) stays below it, later
+    # rounds cross it — both strategies run in ONE crawl
+    monkeypatch.setattr(frontier_mod, "SEEN_AUTO_CROSSOVER_ROWS", 12)
     corpus = gen_corpus(n_pages=110, n_hosts=6, n_seeds=9, seed=43)
     sdfs = corpus_to_spark(spark, corpus)
     rounds = 5
@@ -73,9 +82,6 @@ def test_auto_crawl_matches_oracle_through_crossover(spark, tmp_path):
             max_rounds=rounds,
             n_seen_buckets=8,
             seen_anti_join="auto",
-            # tiny crossover: round 0's delta (seeds) stays below it,
-            # later rounds cross it — both strategies run in ONE crawl
-            seen_auto_crossover_rows=12,
         ),
     )
     m0 = eng.init_state(sdfs["seeds"])
@@ -88,7 +94,7 @@ def test_auto_crawl_matches_oracle_through_crossover(spark, tmp_path):
     assert m["seen_rows"] == parquet_row_count(m["seen"])
 
 
-def test_auto_resumes_pre_auto_shuffle_state_dir(spark, tmp_path):
+def test_auto_resumes_pre_auto_shuffle_state_dir(spark, tmp_path, monkeypatch):
     """A state dir written by a pre-auto 'shuffle' run has NO
     seen_rows key and FLAT deltas without a bucket column; auto must
     derive the count by a footer walk and — when that resolves to
@@ -106,11 +112,11 @@ def test_auto_resumes_pre_auto_shuffle_state_dir(spark, tmp_path):
     # simulate the pre-auto manifest: no seen_rows key
     m.pop("seen_rows", None)
     eng1.store.commit(m)
+    monkeypatch.setattr(frontier_mod, "SEEN_AUTO_CROSSOVER_ROWS", 1)  # force bucket path
     eng2 = FrontierScheduler(
         spark, sdfs["pages"], sdfs["host_policy"], state,
         FrontierConfig(max_rounds=6, n_seen_buckets=8,
-                       seen_anti_join="auto",
-                       seen_auto_crossover_rows=1),  # force bucket path
+                       seen_anti_join="auto"),
     )
     assert eng2._seen_mode(eng2.store.read_manifest()) == "bucket_pruned"
     m2 = eng2.run(max_rounds=6)

@@ -4,21 +4,22 @@ kitchen-sink combination with the sharded bloom probe."""
 
 import datetime as dt
 
+from crypto_crawler_rs_spark.plans import frontier as frontier_mod
 from crypto_crawler_rs_spark.plans.frontier import FrontierConfig, FrontierScheduler
 from crypto_crawler_rs_spark.plans.oracle import OracleCrawler
 from crypto_crawler_rs_spark.sources.fixtures import _render_html, corpus_to_spark, gen_corpus
 
 
-def test_bucket_pruned_crawl_matches_oracle(spark, tmp_path):
+def test_bucket_pruned_crawl_matches_oracle(spark, tmp_path, monkeypatch):
     corpus = gen_corpus(n_pages=110, n_hosts=6, n_seeds=9, seed=43)
     sdfs = corpus_to_spark(spark, corpus)
+    monkeypatch.setattr(frontier_mod, "BLOOM_BROADCAST_MAX_BYTES", 0)  # sharded probe
     eng = FrontierScheduler(
         spark, sdfs["pages"], sdfs["host_policy"], str(tmp_path / "s"),
         FrontierConfig(
             max_rounds=5,
             n_seen_buckets=8,
             seen_anti_join="bucket_pruned",
-            bloom_probe_mode="sharded",
             compact_seen_every=3,  # exercise bucketed compaction too
         ),
     )
